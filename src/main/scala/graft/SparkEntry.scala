@@ -7,20 +7,22 @@ import org.apache.spark.sql.functions._
 import graft.gen.{Synth, SynthParams}
 import graft.ops.{Ann, Dedup, Extract, Incremental, Multimodal, Scoring, TextOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
   * `queries` covers the operator inventory of SURVEY.md §2 over the driver's
   * testdata tables plus the training-data-pipeline ops over
-  * documents/embeddings. EVERY query except g01 has a DuckDB oracle in
-  * `oracleSql` (column names aligned on both sides; money aggregates cast to
-  * DECIMAL before summing so both engines produce exact, order-independent
-  * results). The near-dup/ANN family achieves this by running oracle-portable
-  * md5 twins (ops/Portable.scala) in `queries` while Bench measures the
-  * production hash family under the same names (`benchOverrides`). g01 (the
-  * flagship pipeline) and g15 (its incremental-attach form) are oracle-
-  * checked end-to-end via the portable twin over a fixture parquet both
-  * engines read; the production paths are pinned by ProdFlagshipSpec /
-  * IncrementalSpec and the ScalaTest gates (SURVEY.md §5.2).
+  * documents/embeddings. EVERY query has a DuckDB oracle in `oracleSql`
+  * (column names aligned on both sides; money aggregates cast to DECIMAL
+  * before summing so both engines produce exact, order-independent
+  * results). The near-dup/ANN family and the ER rows (g01, g15, g18) achieve
+  * this by running oracle-portable md5 twins (ops/Portable.scala) in
+  * `queries` while Bench measures the production hash family under the same
+  * names (`benchOverrides`); the ER rows read a fixture parquet both engines
+  * read. The twins differ from production only in the hash kernel: the
+  * batch/attach/detach dataflow behind g15-g18 is ops/DeltaDedup itself,
+  * the code the production minhash dedup state runs. The production ER
+  * paths are pinned by ProdFlagshipSpec / IncrementalSpec and the ScalaTest
+  * gates (SURVEY.md §5.2).
   */
 object SparkEntry {
 
@@ -295,12 +297,13 @@ object SparkEntry {
     // g15: INCREMENTAL ER, cross-engine proof row. The Spark side resolves a
     // deterministic 75% of the fixture as a base corpus, then ATTACHES the
     // remaining 25% as a delta batch touching only delta-adjacent state
-    // (ops/Portable.erClustersPortableIncremental — the portable form of
-    // ops/Incremental.attach). The oracle replays the FULL BATCH twin over
-    // the whole fixture (the g01 SQL): hash equality proves the delta-
-    // maintenance algebra equals a from-scratch run in an independent
-    // engine. Production (xxhash/ensemble) incremental attach is pinned to
-    // its own batch run by IncrementalSpec.
+    // (ops/Portable.erClustersPortableIncremental — DeltaDedup.batch, then
+    // DeltaDedup.attach over the twin's dict+LSH bucket table). The oracle
+    // replays the FULL BATCH twin over the whole fixture (the g01 SQL): hash
+    // equality proves the delta-maintenance algebra equals a from-scratch
+    // run in an independent engine. Production (xxhash/ensemble)
+    // incremental attach (ops/Incremental.attach) is pinned to its own
+    // batch run by IncrementalSpec.
     "g15_incremental_er" -> ((s, _) => {
       val p = FlagshipParams
       graft.ops.Portable.erClustersPortableIncremental(s,

@@ -41,6 +41,16 @@ object Dedup {
         sequence(lit(1), length(text) - k + 1),
         i => text.substr(i, lit(k)))))
 
+  /** The (id, bucket) MinHash-LSH band table over the full document text —
+    * what the batch candidate self-join pairs from and what the incremental
+    * path commits as its band index. */
+  def minhashBandTable(docs: DataFrame, idCol: String, textCol: String,
+      bands: Int = 16, rows: Int = 4, seed: Long = 42L): DataFrame =
+    docs.select(col(idCol).as("id"),
+      explode(lsh_band_keys(
+        minhash_sig(lower(col(textCol)), k = 5, numHashes = bands * rows,
+          seed = seed), bands, rows)).as("bucket"))
+
   /** Candidate near-dup pairs from shared MinHash-LSH bands over the full
     * document text, plus a cleanup handle releasing the cached band table.
     * maxBucket drops degenerate buckets (boilerplate storms) — the stop-key
@@ -49,39 +59,14 @@ object Dedup {
     * one MEMORY_AND_DISK cache per invocation for the session lifetime. */
   def minhashCandidatesManaged(docs: DataFrame, idCol: String, textCol: String,
       bands: Int = 16, rows: Int = 4, maxBucket: Int = 256,
-      seed: Long = 42L, persist: Boolean = true): (DataFrame, () => Unit) = {
-    // persist (default): the keyed (minhash over full text) subtree feeds the
-    // bucket-size agg, the join back, AND both sides of the self-join —
-    // without it the expensive signature is recomputed ~3x (same rationale
-    // as Blocking.blocks). persist=false builds the same plan with no cache
-    // (each consumer recomputes the band table) and a no-op release handle.
-    val keyed0 = docs.select(col(idCol).as("id"),
-      explode(lsh_band_keys(
-        minhash_sig(lower(col(textCol)), k = 5, numHashes = bands * rows,
-          seed = seed), bands, rows)).as("bucket"))
-    val keyed =
-      if (persist) keyed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else keyed0
-    val sized = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket && col("n") > 1)
-    val inBuckets = keyed.join(sized, "bucket")
-    val cands = inBuckets.as("a").join(inBuckets.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    (cands, () => { if (persist) keyed.unpersist(); () })
-  }
-
-  /** Unmanaged candidate view (tests / one-shot sessions): built with
-    * persist=false, so the band table is recomputed by each consumer and
-    * nothing leaks — prefer minhashCandidatesManaged in anything long-lived
-    * or multi-consumer. */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int = 16, rows: Int = 4, maxBucket: Int = 256,
-      seed: Long = 42L): DataFrame = {
-    val (cands, _) = minhashCandidatesManaged(docs, idCol, textCol, bands, rows,
-      maxBucket, seed, persist = false)
-    cands
+      seed: Long = 42L): (DataFrame, () => Unit) = {
+    // the band table (minhash over full text) feeds the bucket-size agg, the
+    // join back, AND both sides of the self-join — without the cache the
+    // expensive signature is recomputed ~3x (same rationale as
+    // Blocking.blocks)
+    val keyed = minhashBandTable(docs, idCol, textCol, bands, rows, seed)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (DeltaDedup.cappedPairs(keyed, maxBucket), () => { keyed.unpersist(); () })
   }
 
   /** MinHash near-dup: LSH candidates verified by exact character-shingle
@@ -112,14 +97,9 @@ object Dedup {
     // per-pair kernel (O(L log L) each); now verification is a merge-count
     // over two cached arrays
     val texts = docs.select(col(idCol).as("id"),
-      shingle_hashes(lower(col(textCol)), 5).as("sh"))
-    val verified = cands
-      .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("jaccard", sorted_jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"))
-    clusterDups(spark, verified, docs, idCol)
+      shingle_hashes(lower(col(textCol)), 5).as("v"))
+    clusterDups(spark, DeltaDedup.verifyBy(texts,
+      sorted_jaccard(_, _) >= threshold)(cands), docs, idCol)
   }
 
   /** SimHash near-dup: 64-bit simhash banded into 4x16-bit bands (any shared
@@ -129,26 +109,18 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3, maxBucket: Int = 256, seed: Long = 42L): DataFrame = {
     val hashed = docs.select(col(idCol).as("id"),
-      simhash64(lower(col(textCol)), seed).as("sh"))
-    val banded = hashed.select(col("id"), col("sh"),
-        explode(array((0 until 4).map(b =>
-          concat_ws(":", lit(b),
-            shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xffffL)))): _*))
-          .as("bucket"))
+      simhash64(lower(col(textCol)), seed).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val sized = banded.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .filter(col("n") <= maxBucket && col("n") > 1)
-      val inB = banded.join(sized, "bucket")
-      val cands = inB.as("a").join(inB.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
-        .distinct()
-        .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= maxHamming)
-        .select("id_a", "id_b")
-      clusterDups(spark, cands, docs, idCol)
-    } finally banded.unpersist()
+      val banded = hashed.select(col("id"),
+        explode(array((0 until 4).map(b =>
+          concat_ws(":", lit(b),
+            shiftrightunsigned(col("v"), b * 16).bitwiseAND(lit(0xffffL)))): _*))
+          .as("bucket"))
+      clusterDups(spark, DeltaDedup.verifyBy(hashed,
+          (a, b) => bit_count(a.bitwiseXOR(b)) <= maxHamming)(
+        DeltaDedup.cappedPairs(banded, maxBucket)), docs, idCol)
+    } finally hashed.unpersist()
   }
 
   /** N-gram (token) Jaccard near-dup over word n-grams: candidates from
@@ -169,14 +141,9 @@ object Dedup {
       n: Int = 3, threshold: Double = 0.7): DataFrame = {
     // same precompute-once trick as minhashNearDup, over word n-gram sets
     val texts = docs.select(col(idCol).as("id"),
-      ngram_hashes(col(textCol), n).as("sh"))
-    val verified = cands
-      .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("jaccard", sorted_jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b")
-    clusterDups(spark, verified, docs, idCol)
+      ngram_hashes(col(textCol), n).as("v"))
+    clusterDups(spark, DeltaDedup.verifyBy(texts,
+      sorted_jaccard(_, _) >= threshold)(cands), docs, idCol)
   }
 
   /** Shared-candidate session for one corpus: computes + caches the minhash
@@ -204,14 +171,14 @@ object Dedup {
     * candidates from shared random-hyperplane sign buckets, verified by
     * cosine >= threshold.
     *
-    * Same capped/late-materialized pattern as minhashCandidates (this was the
-    * one scale-killer left in the family): the (id, vec, bucket) projection is
-    * computed ONCE and cached (Spark's columnar cache prunes the vector column
-    * out of the id-only self-join reads), buckets above `maxBucket` are
-    * dropped whole (one hot bucket of boilerplate/near-constant embeddings is
-    * an O(n²) blowup at 100 TB — DedupSpec plants one and asserts survival),
-    * candidates are generated id-only, and vectors are hydrated back only for
-    * the deduped candidate pairs. */
+    * Same capped/late-materialized pattern as minhashCandidatesManaged (this
+    * was the one scale-killer left in the family): the (id, vec, bucket)
+    * projection is computed ONCE and cached (Spark's columnar cache prunes
+    * the vector column out of the id-only self-join reads), buckets above
+    * `maxBucket` are dropped whole (one hot bucket of boilerplate/near-
+    * constant embeddings is an O(n²) blowup at 100 TB — DedupSpec plants one
+    * and asserts survival), candidates are generated id-only, and vectors
+    * are hydrated back only for the deduped candidate pairs. */
   def embeddingNearDup(spark: SparkSession, embs: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.95, nPlanes: Int = 12, maxBucket: Int = 256,
@@ -220,20 +187,9 @@ object Dedup {
         Ann.signBucket(col(vecCol), nPlanes, seed).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val ids = bucketed.select("id", "bucket")
-      val sized = ids.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .filter(col("n") <= maxBucket && col("n") > 1)
-      val inB = ids.join(sized, "bucket")
-      val cands = inB.as("a").join(inB.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      val vecs = bucketed.select(col("id"), col("v"))
-      val verified = cands
-        .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-        .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-        .filter(cosine_sim(col("v_a"), col("v_b")) >= threshold)
-        .select("id_a", "id_b")
+      val verified = DeltaDedup.verifyBy(bucketed,
+          cosine_sim(_, _) >= threshold)(
+        DeltaDedup.cappedPairs(bucketed.select("id", "bucket"), maxBucket))
       clusterDups(spark, verified, embs.select(col(idCol)), idCol)
     } finally bucketed.unpersist()
   }
@@ -244,9 +200,8 @@ object Dedup {
     * equal numeric order for "dup_of = min doc id" to hold. */
   private[ops] def clusterDups(spark: SparkSession, edges: DataFrame,
       docs: DataFrame, idCol: String): DataFrame = {
-    def key(c: org.apache.spark.sql.Column) = lpad(c.cast("string"), 20, "0")
-    val cc = Clustering.connectedComponents(spark,
-      edges.select(key(col("id_a")).as("u"), key(col("id_b")).as("v")))
+    val cc = Clustering.connectedComponents(spark, edges.select(
+      DeltaDedup.key(col("id_a")).as("u"), DeltaDedup.key(col("id_b")).as("v")))
     cc.select(col("url").cast("long").as(idCol),
       col("cluster_id").cast("long").as("dup_of"))
   }
@@ -268,53 +223,39 @@ object Dedup {
   final case class MinhashDedupState(keyed: DataFrame, edges: DataFrame,
       assign: DataFrame)
 
-  /** The (id, bucket) LSH band table the candidate self-join pairs from —
-    * exposed so the incremental path can commit it as the band index
-    * instead of re-minhashing the corpus per crawl. */
-  def minhashBandTable(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int = 16, rows: Int = 4, seed: Long = 42L): DataFrame =
-    docs.select(col(idCol).as("id"),
-      explode(lsh_band_keys(
-        minhash_sig(lower(col(textCol)), k = 5, numHashes = bands * rows,
-          seed = seed), bands, rows)).as("bucket"))
-
   /** Pair-intrinsic verification for minhash candidates: exact character-
     * shingle Jaccard >= threshold (same kernel as minhashNearDupFrom).
     * Shingle sets are computed only for ids that appear in a candidate pair
-    * (semi-join pruning) — under attach this is what keeps verification
-    * delta-proportional instead of re-shingling the corpus. */
+    * (semi-join pruning) — under attach/detach this is what keeps
+    * verification delta-proportional instead of re-shingling the corpus.
+    * `deltaSized` broadcasts the pruning id set; only attach/detach, whose
+    * candidates are delta-proportional, may set it — the batch build's ids
+    * are every endpoint of the corpus's candidate pairs. */
   private def minhashVerify(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double)(cands: DataFrame): DataFrame = {
+      threshold: Double, deltaSized: Boolean)(cands: DataFrame): DataFrame = {
     val ids = cands.select(col("id_a").as("id"))
       .union(cands.select(col("id_b").as("id"))).distinct()
     val texts = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-      .join(broadcast(ids), Seq("id"), "left_semi")
-      .select(col("id"), shingle_hashes(lower(col("t")), 5).as("sh"))
-    cands
-      .join(texts.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(texts.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .filter(sorted_jaccard(col("sh_a"), col("sh_b")) >= threshold)
-      .select("id_a", "id_b")
+      .join(if (deltaSized) broadcast(ids) else ids, Seq("id"), "left_semi")
+      .select(col("id"), shingle_hashes(lower(col("t")), 5).as("v"))
+    DeltaDedup.verifyBy(texts, sorted_jaccard(_, _) >= threshold)(cands)
   }
 
-  /** Batch-build the committed state over a base corpus. Semantics are
-    * exactly minhashNearDup's (same band table, same stop-key cap, same
-    * shingle-Jaccard verification): state.assign restricted to
-    * url != cluster_id is its (doc_id, dup_of) output —
-    * DedupIncrementalSpec pins this. */
+  /** Batch-build the committed state over a base corpus (DeltaDedup.batch
+    * with the production kernel). Semantics are exactly minhashNearDup's
+    * (same band table, same stop-key cap, same shingle-Jaccard
+    * verification): state.assign restricted to url != cluster_id is its
+    * (doc_id, dup_of) output — DedupIncrementalSpec pins this. */
   def minhashDedupState(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bands: Int = 16, rows: Int = 4,
       maxBucket: Int = 256, seed: Long = 42L): MinhashDedupState = {
-    def keep(df: DataFrame) = df.localCheckpoint(eager = true)
-    val keyed = keep(minhashBandTable(docs, idCol, textCol, bands, rows, seed))
-    val edges = keep(minhashVerify(docs, idCol, textCol, threshold)(
-      DeltaDedup.cappedPairs(keyed, maxBucket)))
-    val assign = keep(Clustering.clusters(spark,
-      edges.select(DeltaDedup.key(col("id_a")).as("url_a"),
-        DeltaDedup.key(col("id_b")).as("url_b"), lit(true).as("is_match")),
-      docs.select(DeltaDedup.key(col(idCol)).as("url"))))
-    MinhashDedupState(keyed, edges, assign)
+    val keyed = minhashBandTable(docs, idCol, textCol, bands, rows, seed)
+      .localCheckpoint(eager = true)
+    val base = DeltaDedup.batch(spark, keyed, docs.select(col(idCol).as("id")),
+      minhashVerify(docs, idCol, textCol, threshold, deltaSized = false),
+      maxBucket)
+    MinhashDedupState(keyed, base.edges, base.assign)
   }
 
   /** Parquet round-trip for the committed state. */
@@ -355,14 +296,12 @@ object Dedup {
     val keyedAll = state.keyed.withColumn("is_delta", lit(false))
       .unionByName(keyedD.withColumn("is_delta", lit(true)))
     val att = DeltaDedup.attach(spark, keyedAll, state.edges, state.assign,
-      minhashVerify(allDocs, idCol, textCol, threshold), maxBucket)
+      minhashVerify(allDocs, idCol, textCol, threshold, deltaSized = true),
+      maxBucket)
     val mergedEdges = state.edges
       .join(broadcast(att.removed), Seq("id_a", "id_b"), "left_anti")
       .unionByName(att.added)
-    val dups = att.assign.filter(col("url") =!= col("cluster_id"))
-      .select(col("url").cast("long").as(idCol),
-        col("cluster_id").cast("long").as("dup_of"))
-    DedupAttachResult(dups,
+    DedupAttachResult(DeltaDedup.dups(att.assign, idCol),
       MinhashDedupState(state.keyed.unionByName(keyedD), mergedEdges, att.assign),
       att.removed)
   }
@@ -385,16 +324,14 @@ object Dedup {
     val delIds = deletedIds.select(col(idCol).as("id"))
       .localCheckpoint(eager = true)
     val att = DeltaDedup.detach(spark, state.keyed, delIds, state.edges,
-      state.assign, minhashVerify(remainingDocs, idCol, textCol, threshold),
+      state.assign,
+      minhashVerify(remainingDocs, idCol, textCol, threshold, deltaSized = true),
       maxBucket)
     val mergedKeyed = state.keyed.join(broadcast(delIds), Seq("id"), "left_anti")
     val mergedEdges = state.edges
       .join(broadcast(att.removed), Seq("id_a", "id_b"), "left_anti")
       .unionByName(att.added)
-    val dups = att.assign.filter(col("url") =!= col("cluster_id"))
-      .select(col("url").cast("long").as(idCol),
-        col("cluster_id").cast("long").as("dup_of"))
-    DedupAttachResult(dups,
+    DedupAttachResult(DeltaDedup.dups(att.assign, idCol),
       MinhashDedupState(mergedKeyed, mergedEdges, att.assign), att.removed)
   }
 }

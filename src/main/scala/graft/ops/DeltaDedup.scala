@@ -3,14 +3,22 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Delta-maintenance algebra for the banded near-dup family (SURVEY.md §2.12
-  * row I8): given the committed dedup state of a base corpus and an
-  * inserts-only delta batch, produce the cluster assignment the FULL BATCH
-  * dedup would produce over base ∪ delta — touching only delta-adjacent
-  * state. Generic over the hash kernel: the md5-portable twin
-  * (Portable.nearDupMd5Incremental, cross-engine proof row g16) and the
-  * production xxhash path (Dedup.minhashNearDupAttach) both call this core,
-  * so the survivor/cap-crossing logic cannot drift between them.
+/** The banded near-dup dataflow — capped bucket candidates → pair-intrinsic
+  * verification → CC — defined once, in its batch, attach and detach forms
+  * (SURVEY.md §2.12 row I8). `batch` builds the committed state (verified
+  * edges + full assignment) of a corpus; `attach` folds an inserts-only delta
+  * into it and `detach` removes a delete batch, both producing the cluster
+  * assignment the FULL BATCH would produce over the changed corpus while
+  * touching only delta-adjacent state.
+  *
+  * Generic over the hash kernel: callers pass the (id, bucket) table, the
+  * `verify` function and the CC key function as plain arguments. The
+  * production xxhash family (Dedup.minhashDedupState / minhashNearDupAttach /
+  * minhashNearDupDetach), the md5 near-dup twins (Portable.nearDupMd5
+  * Incremental / Detach, cross-engine rows g16/g17) and the md5 ER twins
+  * (Portable.erClustersPortableIncremental / Detach, rows g15/g18, url keys
+  * with keyFn = identity) all run this code, so the survivor/cap-crossing
+  * logic cannot drift between them.
   *
   * Candidate-diff completeness under inserts-only deltas (band buckets only
   * GAIN members, so n_new >= n_old):
@@ -29,9 +37,9 @@ import org.apache.spark.sql.functions._
   * flips are exactly edge flips, and CC labels are maintained with the same
   * dissolve/re-solve pattern as the ER attach (ops/Incremental I5).
   *
-  * Scale shape: every shuffle is delta-proportional — base state is read as
-  * scans pruned by semi-joins against the touched buckets / affected ids;
-  * nothing re-hashes or re-pairs the untouched corpus.
+  * Scale shape: every attach/detach shuffle is delta-proportional — base
+  * state is read as scans pruned by semi-joins against the touched buckets /
+  * affected ids; nothing re-hashes or re-pairs the untouched corpus.
   */
 object DeltaDedup {
 
@@ -61,9 +69,10 @@ object DeltaDedup {
     * min-label representative equals the min numeric id. */
   private[ops] def key(c: Column): Column = lpad(c.cast("string"), 20, "0")
 
-  /** Shared batch candidate rule: buckets with 1 < n <= maxBucket generate
-    * all (id_a < id_b) member pairs; over-cap (stop-key) and singleton
-    * buckets generate none. `keyed` is (id, bucket, ...). */
+  /** The candidate rule of every banded family, production and portable:
+    * buckets with 1 < n <= maxBucket generate all (id_a < id_b) member
+    * pairs; over-cap (stop-key) and singleton buckets generate none.
+    * `keyed` is (id, bucket, ...). */
   private[ops] def cappedPairs(keyed: DataFrame, maxBucket: Int): DataFrame = {
     val sized = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
       .filter(col("n") <= maxBucket && col("n") > 1)
@@ -72,6 +81,57 @@ object DeltaDedup {
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+  }
+
+  /** Pair-intrinsic verifier over a per-id value table `vals` (id, v):
+    * hydrates both endpoints of each (id_a, id_b) candidate and keeps the
+    * pairs `accept(v_a, v_b)` holds for. */
+  private[ops] def verifyBy(vals: DataFrame, accept: (Column, Column) => Column)(
+      cands: DataFrame): DataFrame =
+    cands
+      .join(vals.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
+      .join(vals.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
+      .filter(accept(col("v_a"), col("v_b")))
+      .select("id_a", "id_b")
+
+  /** (idCol, dup_of) view of an lpad-keyed assignment: one row per node whose
+    * representative (the component's min id) is another node. */
+  private[ops] def dups(assign: DataFrame, idCol: String): DataFrame =
+    assign.filter(col("url") =!= col("cluster_id"))
+      .select(col("url").cast("long").as(idCol),
+        col("cluster_id").cast("long").as("dup_of"))
+
+  /** (url_a, url_b) CC-keyed form of (id_a, id_b) edges. */
+  private def urlEdges(edges: DataFrame, keyFn: Column => Column): DataFrame =
+    edges.select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
+
+  /** Committed state of one banded near-dup run. */
+  final case class Batch(
+      /** (id_a, id_b) verified edges, id_a < id_b. */
+      edges: DataFrame,
+      /** (url, cluster_id) keyFn-keyed assignment for every node. */
+      assign: DataFrame)
+
+  /** Batch form: the verified edges `verify(cappedPairs(keyed))` and the CC
+    * assignment over `nodes`, both eagerly plan-cut — the base state
+    * `attach`/`detach` consume.
+    *
+    * @param keyed  (id, bucket, ...) band table of the corpus.
+    * @param nodes  (id) every node the assignment covers; ids without a
+    *               verified edge are their own cluster.
+    * The other parameters are as in attach. */
+  def batch(spark: SparkSession, keyed: DataFrame, nodes: DataFrame,
+      verify: DataFrame => DataFrame, maxBucket: Int,
+      keyFn: Column => Column = key): Batch = {
+    def keep(name: String)(df: DataFrame): DataFrame = {
+      Diag.dumpPlan(s"ddb_$name", df)
+      df.localCheckpoint(eager = true)
+    }
+    val edges = keep("edges")(verify(cappedPairs(keyed, maxBucket)))
+    val assign = keep("assign")(Clustering.clusters(spark,
+      urlEdges(edges, keyFn).withColumn("is_match", lit(true)),
+      nodes.select(keyFn(col("id")).as("url"))))
+    Batch(edges, assign)
   }
 
   /** Attach an inserts-only delta to a committed dedup state.
@@ -99,7 +159,8 @@ object DeltaDedup {
     // eager plan-cut leaves, not persist(): each keep() below roots several
     // downstream self-referencing branches, and without a LOGICAL-plan cut
     // the diff algebra's analyzed plan grows exponentially (persist() caches
-    // data but keeps the full plan; see Portable.erClustersPortableIncremental)
+    // data but keeps the full plan — measured on the ER twin: analysis time
+    // doubling per stage and a driver analyzer OOM at 800 fixture pages)
     def keep(name: String)(df: DataFrame): DataFrame = {
       Diag.dumpPlan(s"dd_$name", df)
       df.localCheckpoint(eager = true)
@@ -198,40 +259,12 @@ object DeltaDedup {
     val removedL = keep("removedL")(baseEdges.join(broadcast(trueRemoved),
       Seq("id_a", "id_b"), "left_semi"))
     val addedL = await(addedLF)
-    val removedK = removedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-    val addedK = addedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-
     // dissolve components an edge flip touches; re-solve with delta nodes;
     // everything else keeps its base label (same pattern as the ER attach)
-    val changedUrls = removedK.select(col("url_a").as("url"))
-      .union(removedK.select(col("url_b").as("url")))
-      .union(addedK.select(col("url_a").as("url")))
-      .union(addedK.select(col("url_b").as("url")))
-      .distinct()
-    val affectedLabels = keep("affectedLabels")(baseAssign
-      .join(broadcast(changedUrls), Seq("url"), "left_semi")
-      .select("cluster_id").distinct())
-    val memberUrls = keep("memberUrls")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url"))
-    val subNodes = memberUrls
-      .union(keyedD.select(keyFn(col("id")).as("url")).distinct()).distinct()
-    val memberEdges = baseEdges
-      .select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
-      .join(broadcast(memberUrls.withColumnRenamed("url", "url_a")),
-        Seq("url_a"), "left_semi")
-    val subEdges = memberEdges
-      .join(broadcast(removedK), Seq("url_a", "url_b"), "left_anti")
-      .unionByName(addedK)
-      .withColumn("is_match", lit(true))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-    val assign = keep("assign")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id")))
-    Attached(assign, removedL, addedL)
+    resolveFlips(spark, keep, baseEdges, baseAssign, removedL, addedL, keyFn,
+      changedNodes = Nil,
+      subNodes = _.union(keyedD.select(keyFn(col("id")).as("url")).distinct())
+        .distinct())
   }
 
   /** Detach a delete batch from a committed dedup state: produce the cluster
@@ -276,8 +309,9 @@ object DeltaDedup {
     val touched = keep("touched")(delMembers.select("bucket").distinct())
     val oldT = baseKeyed.join(broadcast(touched), Seq("bucket"), "left_semi")
     val newT = keep("newT")(oldT.join(broadcast(delIds), Seq("id"), "left_anti"))
-    val sizes = keep("sizes")(newT.groupBy("bucket").agg(count(lit(1)).as("n_new"))
-      .join(broadcast(touched), Seq("bucket"), "right_outer")
+    val sizes = keep("sizes")(touched
+      .join(broadcast(newT.groupBy("bucket").agg(count(lit(1)).as("n_new"))),
+        Seq("bucket"), "left_outer")
       .select(col("bucket"), coalesce(col("n_new"), lit(0L)).as("n_new"))
       .join(delMembers.groupBy("bucket").agg(count(lit(1)).as("n_d")),
         Seq("bucket"), "left")
@@ -310,36 +344,45 @@ object DeltaDedup {
         broadcast(addedCand.select("id_a").distinct()),
         Seq("id_a"), "left_semi")), Seq("id_a", "id_b"), "left_anti"))
 
-    val removedK = removedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-    val addedK = addedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-    val delUrls = delIds.select(keyFn(col("id")).as("url"))
-
     // dissolve components touched by an edge flip or holding a deleted node;
     // re-solve without the deleted nodes; keep every other label verbatim
-    val changedUrls = removedK.select(col("url_a").as("url"))
-      .union(removedK.select(col("url_b").as("url")))
-      .union(addedK.select(col("url_a").as("url")))
-      .union(addedK.select(col("url_b").as("url")))
-      .union(delUrls)
-      .distinct()
+    val delUrls = delIds.select(keyFn(col("id")).as("url"))
+    resolveFlips(spark, keep, baseEdges, baseAssign, removedL, addedL, keyFn,
+      changedNodes = Seq(delUrls),
+      subNodes = _.join(broadcast(delUrls), Seq("url"), "left_anti"))
+  }
+
+  /** The CC tail of attach and detach: dissolve every base component that an
+    * edge flip or a `changedNodes` url touches, re-solve those components
+    * over their surviving base edges plus the added ones on the node set
+    * `subNodes(memberUrls)`, and keep every other base label verbatim.
+    * Every probe into the base edges/assignment broadcasts its flip-
+    * proportional side. */
+  private def resolveFlips(spark: SparkSession,
+      keep: String => DataFrame => DataFrame, baseEdges: DataFrame,
+      baseAssign: DataFrame, removedL: DataFrame, addedL: DataFrame,
+      keyFn: Column => Column, changedNodes: Seq[DataFrame],
+      subNodes: DataFrame => DataFrame): Attached = {
+    val removedK = urlEdges(removedL, keyFn)
+    val addedK = urlEdges(addedL, keyFn)
+    val changedUrls = (Seq(removedK.select(col("url_a").as("url")),
+        removedK.select(col("url_b").as("url")),
+        addedK.select(col("url_a").as("url")),
+        addedK.select(col("url_b").as("url"))) ++ changedNodes)
+      .reduce(_ union _).distinct()
     val affectedLabels = keep("affectedLabels")(baseAssign
       .join(broadcast(changedUrls), Seq("url"), "left_semi")
       .select("cluster_id").distinct())
     val memberUrls = keep("memberUrls")(baseAssign
       .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
       .select("url"))
-    val subNodes = memberUrls.join(broadcast(delUrls), Seq("url"), "left_anti")
-    val memberEdges = baseEdges
-      .select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
+    val subEdges = urlEdges(baseEdges, keyFn)
       .join(broadcast(memberUrls.withColumnRenamed("url", "url_a")),
         Seq("url_a"), "left_semi")
-    val subEdges = memberEdges
       .join(broadcast(removedK), Seq("url_a", "url_b"), "left_anti")
       .unionByName(addedK)
       .withColumn("is_match", lit(true))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
+    val resolved = Clustering.clusters(spark, subEdges, subNodes(memberUrls))
     val assign = keep("assign")(baseAssign
       .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
       .select("url", "cluster_id")

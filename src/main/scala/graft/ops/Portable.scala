@@ -3,19 +3,22 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Oracle-portable twins of the near-dup family.
+/** Oracle-portable twins of the near-dup family and the flagship ER
+  * pipeline.
   *
   * The production operators (Dedup.*) hash with xxhash64 / the custom
   * codegen'd kernels — fast, but no other engine can replicate them, so the
   * driver's DuckDB oracle could only count rows. These twins run the SAME
-  * dataflow shape — capped LSH band candidates → exact-similarity
-  * verification → connected-components clustering — but draw every hash from
-  * md5 (which DuckDB computes bit-identically), every similarity from exact
-  * set intersection over the SAME element sets both engines can build in SQL,
-  * and every tiebreak from total orders both engines share. Result: the full
-  * candidates→verify→cluster pipeline is hash-checkable end-to-end against an
-  * independent SQL engine (CC verified via a recursive-CTE transitive
-  * closure).
+  * dataflow — capped LSH band candidates (DeltaDedup.cappedPairs) → exact-
+  * similarity verification → connected-components clustering, and for the
+  * incremental rows DeltaDedup.batch/attach/detach themselves — but draw
+  * every hash from md5 (which DuckDB computes bit-identically), every
+  * similarity from exact set intersection over the SAME element sets both
+  * engines can build in SQL, and every tiebreak from total orders both
+  * engines share. Only the (id, bucket) table and the verify function are
+  * twin-specific. Result: the full candidates→verify→cluster pipeline is
+  * hash-checkable end-to-end against an independent SQL engine (CC verified
+  * via a recursive-CTE transitive closure).
   *
   * Use the production family for throughput (Bench overrides the g02/g03/g04/
   * g11 bench entries back to it); use this family when cross-engine
@@ -64,17 +67,21 @@ object Portable {
     inter.cast("double") / (size(a) + size(b) - inter).cast("double")
   }
 
-  /** Shared candidate machinery: explode per-id bucket strings, drop buckets
-    * over maxBucket (stop-key cap, same semantics as the production family),
-    * emit distinct (id_a < id_b) pairs. */
-  private def cappedCandidates(keyed: DataFrame, maxBucket: Int): DataFrame = {
-    val sized = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket && col("n") > 1)
-    val inB = keyed.join(sized, "bucket")
-    inB.as("a").join(inB.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+  /** The md5 near-dup kernel over an element-set column: the (id, bucket)
+    * md5-minhash band table and the exact set-Jaccard verifier, both over
+    * one plan-cut (id, set) table. */
+  private def md5Kernel(docs: DataFrame, idCol: String, setCol: Column,
+      threshold: Double, numHashes: Int, bands: Int,
+      rows: Int): (DataFrame, DataFrame => DataFrame) = {
+    // eager plan-cut leaves: the md5 minhash signature over every element
+    // is the twin's dominant cost, and the set table is read by the band
+    // explode and by every verification
+    val sets = docs.select(col(idCol).as("id"), setCol.as("v"))
+      .localCheckpoint(eager = true)
+    val keyed = sets.select(col("id"),
+      explode(bandBuckets(md5MinhashSig(col("v"), numHashes), bands, rows))
+        .as("bucket")).localCheckpoint(eager = true)
+    (keyed, DeltaDedup.verifyBy(sets, setJaccard(_, _) >= threshold))
   }
 
   /** Portable near-dup over any element-set column: md5-minhash band
@@ -83,106 +90,53 @@ object Portable {
   def nearDupMd5(spark: SparkSession, docs: DataFrame, idCol: String,
       setCol: Column, threshold: Double, numHashes: Int = 16, bands: Int = 8,
       rows: Int = 2, maxBucket: Int = 256): DataFrame = {
-    val sets = docs.select(col(idCol).as("id"), setCol.as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keyed = sets.select(col("id"),
-        explode(bandBuckets(md5MinhashSig(col("sh"), numHashes), bands, rows))
-          .as("bucket"))
-      val verified = cappedCandidates(keyed, maxBucket)
-        .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-        .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-        .filter(setJaccard(col("sh_a"), col("sh_b")) >= threshold)
-        .select("id_a", "id_b")
-      Dedup.clusterDups(spark, verified, docs, idCol)
-    } finally sets.unpersist()
+    val (keyed, verify) = md5Kernel(docs, idCol, setCol, threshold,
+      numHashes, bands, rows)
+    Dedup.clusterDups(spark, verify(DeltaDedup.cappedPairs(keyed, maxBucket)),
+      docs, idCol)
   }
 
+  /** md5 slice of the id space (~25%) the incremental rows move. */
+  private def md5Slice(id: Column): Column =
+    substring(md5(id.cast("string")), 1, 1).isin("c", "d", "e", "f")
+
   /** INCREMENTAL form of the md5 minhash near-dup twin (cross-engine proof
-    * row g16 — the delta-maintenance algebra of ops/Incremental extended to
-    * the training-data dedup family): splits the documents table by a
-    * deterministic md5 hash of the id into a ~75% "base" corpus and a ~25%
-    * "delta" batch, dedups the base exactly as nearDupMd5 would, then
-    * ATTACHES the delta touching only delta-adjacent state. The DuckDB
+    * row g16): the ~75% of documents outside the md5 slice are the base
+    * corpus, deduped by DeltaDedup.batch; the slice is then ATTACHED by
+    * DeltaDedup.attach — the same calls the production xxhash path
+    * (Dedup.minhashDedupState / minhashNearDupAttach) makes. The DuckDB
     * oracle replays the FULL BATCH twin over the whole table (the g02 SQL):
     * hash equality proves the attach equals a from-scratch dedup in an
-    * independent engine.
-    *
-    * The delta algebra itself (candidate diff, cap-crossing survivor
-    * check, CC dissolve/re-solve — with its completeness argument) lives in
-    * DeltaDedup.attach, shared with the production xxhash path
-    * (Dedup.minhashNearDupAttach) so the two instantiations cannot drift. */
+    * independent engine. */
   def nearDupMd5Incremental(spark: SparkSession, docs: DataFrame, idCol: String,
       setCol: Column, threshold: Double, numHashes: Int = 16, bands: Int = 8,
       rows: Int = 2, maxBucket: Int = 256): DataFrame = {
-    // eager plan-cut leaves, not persist() — see erClustersPortableIncremental
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-    val isDelta = substring(md5(col("id").cast("string")), 1, 1)
-      .isin("c", "d", "e", "f")
-    val sets = keep(docs.select(col(idCol).as("id"), setCol.as("sh")))
-    // materialized ONCE: the md5 minhash signature over every shingle is the
-    // twin's dominant cost, and the base/delta split below would otherwise
-    // recompute it per filter
-    val keyedAll = keep(sets.select(col("id"),
-      explode(bandBuckets(md5MinhashSig(col("sh"), numHashes), bands, rows))
-        .as("bucket"))
-      .withColumn("is_delta", isDelta))
+    val (keyed, verify) = md5Kernel(docs, idCol, setCol, threshold,
+      numHashes, bands, rows)
+    val keyedAll = keyed.withColumn("is_delta", md5Slice(col("id")))
     val keyedB = keyedAll.filter(!col("is_delta"))
-    def verify(cands: DataFrame) = cands
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .filter(setJaccard(col("sh_a"), col("sh_b")) >= threshold)
-      .select("id_a", "id_b")
-
-    // committed base state (in-query here; stage tables in a deployment)
-    val baseEdges = keep(verify(DeltaDedup.cappedPairs(keyedB, maxBucket)))
-    val clustersB = keep(Clustering.clusters(spark,
-      baseEdges.select(DeltaDedup.key(col("id_a")).as("url_a"),
-        DeltaDedup.key(col("id_b")).as("url_b"), lit(true).as("is_match")),
-      keyedB.select(DeltaDedup.key(col("id")).as("url")).distinct()))
-
-    val att = DeltaDedup.attach(spark, keyedAll, baseEdges, clustersB,
-      verify, maxBucket)
-    att.assign.filter(col("url") =!= col("cluster_id"))
-      .select(col("url").cast("long").as(idCol),
-        col("cluster_id").cast("long").as("dup_of"))
+    val base = DeltaDedup.batch(spark, keyedB, keyedB.select("id"), verify,
+      maxBucket)
+    DeltaDedup.dups(DeltaDedup.attach(spark, keyedAll, base.edges, base.assign,
+      verify, maxBucket).assign, idCol)
   }
 
   /** DELETE form of the md5 near-dup twin (cross-engine proof row g17 —
     * the takedown half of the delta algebra): dedups the WHOLE documents
-    * table as the committed base, then DETACHES a deterministic ~25% md5
+    * table as the committed base (DeltaDedup.batch), then DETACHES the md5
     * slice via DeltaDedup.detach. The DuckDB oracle replays the full-batch
     * g02 SQL over the REMAINING ~75% only: hash equality proves the detach
     * equals a from-scratch dedup of the post-delete corpus. */
   def nearDupMd5Detach(spark: SparkSession, docs: DataFrame, idCol: String,
       setCol: Column, threshold: Double, numHashes: Int = 16, bands: Int = 8,
       rows: Int = 2, maxBucket: Int = 256): DataFrame = {
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-    val isDeleted = substring(md5(col("id").cast("string")), 1, 1)
-      .isin("c", "d", "e", "f")
-    val sets = keep(docs.select(col(idCol).as("id"), setCol.as("sh")))
-    val keyedAll = keep(sets.select(col("id"),
-      explode(bandBuckets(md5MinhashSig(col("sh"), numHashes), bands, rows))
-        .as("bucket")))
-    def verify(cands: DataFrame) = cands
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .filter(setJaccard(col("sh_a"), col("sh_b")) >= threshold)
-      .select("id_a", "id_b")
-
-    // committed base state over the FULL table
-    val baseEdges = keep(verify(DeltaDedup.cappedPairs(keyedAll, maxBucket)))
-    val clustersB = keep(Clustering.clusters(spark,
-      baseEdges.select(DeltaDedup.key(col("id_a")).as("url_a"),
-        DeltaDedup.key(col("id_b")).as("url_b"), lit(true).as("is_match")),
-      keyedAll.select(DeltaDedup.key(col("id")).as("url")).distinct()))
-
-    val att = DeltaDedup.detach(spark, keyedAll,
-      sets.filter(isDeleted).select("id"), baseEdges, clustersB,
-      verify, maxBucket)
-    att.assign.filter(col("url") =!= col("cluster_id"))
-      .select(col("url").cast("long").as(idCol),
-        col("cluster_id").cast("long").as("dup_of"))
+    val (keyed, verify) = md5Kernel(docs, idCol, setCol, threshold,
+      numHashes, bands, rows)
+    val ids = keyed.select("id").distinct()
+    val base = DeltaDedup.batch(spark, keyed, ids, verify, maxBucket)
+    DeltaDedup.dups(DeltaDedup.detach(spark, keyed,
+      ids.filter(md5Slice(col("id"))), base.edges, base.assign,
+      verify, maxBucket).assign, idCol)
   }
 
   /** Portable 60-bit SimHash (Charikar bit-vote over whitespace tokens WITH
@@ -208,19 +162,17 @@ object Portable {
   def simhashNearDupMd5(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
-    val hashed = docs.select(col(idCol).as("id"), simhash60(col(textCol)).as("sh"))
+    val hashed = docs.select(col(idCol).as("id"), simhash60(col(textCol)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val keyed = hashed.select(col("id"),
         explode(array((0 until 4).map(b =>
           concat(lit("b"), lit(b.toString), lit(":"),
-            shiftrightunsigned(col("sh"), b * 15).bitwiseAND(lit(32767L))
+            shiftrightunsigned(col("v"), b * 15).bitwiseAND(lit(32767L))
               .cast("string"))): _*)).as("bucket"))
-      val verified = cappedCandidates(keyed, maxBucket)
-        .join(hashed.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-        .join(hashed.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-        .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= maxHamming)
-        .select("id_a", "id_b")
+      val verified = DeltaDedup.verifyBy(hashed,
+          (a, b) => bit_count(a.bitwiseXOR(b)) <= maxHamming)(
+        DeltaDedup.cappedPairs(keyed, maxBucket))
       Dedup.clusterDups(spark, verified, docs, idCol)
     } finally hashed.unpersist()
   }
@@ -256,7 +208,12 @@ object Portable {
     * `main_scripts/step9_processing_all_documents.py:123-215`. */
   def erClustersPortable(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame =
-    erComponentsPortable(spark, pages, dict, maxBlock, minShared)
+    clusterSizes(erComponentsPortable(spark, pages, dict, maxBlock, minShared))
+
+  /** (cluster_id, cluster_size) of the components with >= 2 members, from
+    * (url, cluster_id) rows. */
+  private def clusterSizes(assign: DataFrame): DataFrame =
+    assign.filter(col("url") =!= col("cluster_id"))
       .groupBy("cluster_id")
       .agg((count(lit(1)) + lit(1)).as("cluster_size"))
 
@@ -269,8 +226,8 @@ object Portable {
     val ok = portableOk(pages)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cands = cappedCandidates(portableBuckets(portableMen(ok), dict), maxBlock)
-      val verified = portableVerify(cands, portableToks(ok), minShared)
+      val verified = portableVerify(portableToks(ok), minShared)(
+        DeltaDedup.cappedPairs(portableBuckets(portableMen(ok), dict), maxBlock))
       // s5: CC over url strings (eager: every round materializes, so the
       // returned frame reads only the converged cut — safe to unpersist ok)
       Clustering.connectedComponents(spark,
@@ -316,22 +273,28 @@ object Portable {
     dictBlk.unionByName(lshBlk).distinct().withColumnRenamed("url", "id")
   }
 
-  /** s4 feature input: distinct token set per page → (url, tk). */
+  /** s4 feature input: distinct token set per page → (id = url, v). */
   private[ops] def portableToks(ok: DataFrame): DataFrame =
-    ok.select(col("url"), graft.functions.token_set(col("text")).as("tk"))
+    ok.select(col("url").as("id"), graft.functions.token_set(col("text")).as("v"))
 
   /** s4: portable context-overlap scorer over (id_a, id_b) candidates. */
-  private[ops] def portableVerify(cands: DataFrame, toks: DataFrame,
-      minShared: Int): DataFrame =
-    cands
-      .join(toks.select(col("url").as("id_a"), col("tk").as("tk_a")), "id_a")
-      .join(toks.select(col("url").as("id_b"), col("tk").as("tk_b")), "id_b")
-      .filter(size(array_intersect(col("tk_a"), col("tk_b"))) >= minShared)
-      .select("id_a", "id_b")
+  private[ops] def portableVerify(toks: DataFrame,
+      minShared: Int): DataFrame => DataFrame =
+    DeltaDedup.verifyBy(toks, (a, b) => size(array_intersect(a, b)) >= minShared)
+
+  /** The ER twin's kernel for DeltaDedup over plan-cut latest-snapshot pages
+    * `ok`: the plan-cut (bucket, id = url) dict+LSH block table and the
+    * token-overlap verifier. */
+  private def erKernel(ok: DataFrame, dict: DataFrame,
+      minShared: Int): (DataFrame, DataFrame => DataFrame) = {
+    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+    (keep(portableBuckets(portableMen(ok), dict)),
+      portableVerify(keep(portableToks(ok)), minShared))
+  }
 
   /** DELETE form of the portable ER twin (cross-engine proof row g18 — the
     * takedown half of the ER delta algebra): the FULL fixture is the
-    * committed base; a deterministic ~25% md5 url slice is detached via
+    * committed base (DeltaDedup.batch); the md5 url slice is detached via
     * DeltaDedup.detach instantiated with the twin's combined dict+LSH
     * bucket table and its pair-intrinsic token-overlap verifier (urls pass
     * keyFn=identity — they are already totally-ordered CC keys). The DuckDB
@@ -340,146 +303,47 @@ object Portable {
     * corpus. Output shape matches g01 (cluster_id, cluster_size). */
   def erClustersPortableDetach(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-    val isDeleted = substring(md5(col("url")), 1, 1).isin("c", "d", "e", "f")
-    val ok = keep(portableOk(pages))
-    val blk = keep(portableBuckets(portableMen(ok), dict))
-    val toks = keep(portableToks(ok))
-    def verify(cands: DataFrame) = portableVerify(cands, toks, minShared)
-
-    // committed base state over the FULL fixture
-    val edgesB = keep(verify(cappedCandidates(blk, maxBlock)))
-    val clustersB = keep(Clustering.clusters(spark,
-      edgesB.select(col("id_a").as("url_a"), col("id_b").as("url_b"),
-        lit(true).as("is_match")),
-      ok.select("url")))
-
-    val att = DeltaDedup.detach(spark, blk,
-      ok.filter(isDeleted).select(col("url").as("id")),
-      edgesB, clustersB, verify, maxBlock, keyFn = identity)
-    keep(att.assign.filter(col("url") =!= col("cluster_id"))
-      .groupBy("cluster_id")
-      .agg((count(lit(1)) + lit(1)).as("cluster_size")))
+    val ok = portableOk(pages).localCheckpoint(eager = true)
+    val (blk, verify) = erKernel(ok, dict, minShared)
+    val urls = ok.select(col("url").as("id"))
+    val base = DeltaDedup.batch(spark, blk, urls, verify, maxBlock,
+      keyFn = identity)
+    clusterSizes(DeltaDedup.detach(spark, blk, urls.filter(md5Slice(col("id"))),
+      base.edges, base.assign, verify, maxBlock, keyFn = identity).assign)
+      .localCheckpoint(eager = true)
   }
 
   /** INCREMENTAL form of the portable ER twin (the cross-engine proof row
-    * for ops/Incremental's delta-maintenance algebra, g15): splits the
-    * fixture by a deterministic md5 url hash into a ~75% "base" corpus and a
-    * ~25% "delta" batch, resolves the base exactly as erComponentsPortable
-    * would, then ATTACHES the delta touching only delta-adjacent state —
-    * touched buckets, their regenerated candidates, survivors from untouched
-    * buckets, and a CC re-solve restricted to dissolved components — and
-    * returns the final (cluster_id, cluster_size) table. The DuckDB oracle
-    * replays the FULL BATCH twin over the whole fixture (the g01 SQL): hash
-    * equality IS the proof that the incremental algebra reproduces the batch
-    * result in an independent engine.
+    * for the ER delta-maintenance algebra, g15): the fixture's urls outside
+    * the md5 slice (~75%) are the base corpus, resolved by DeltaDedup.batch
+    * exactly as erComponentsPortable would; the slice (~25%) is then
+    * ATTACHED by DeltaDedup.attach, touching only delta-adjacent state —
+    * the call shape of erClustersPortableDetach with the bucket table
+    * tagged is_delta. The DuckDB oracle replays the FULL BATCH twin over the
+    * whole fixture (the g01 SQL): hash equality IS the proof that the
+    * incremental algebra reproduces the batch result in an independent
+    * engine.
     *
     * The delta is inserts-only by construction (url-level split), which
-    * still exercises every structural case the attach algebra has: bucket
-    * eligibility flips (a bucket crossing the stop-key cap on insert DROPS
-    * its existing candidates — edge removal, cluster splits), new
-    * cross-cluster links (merges), survivors via untouched buckets, and
-    * isolated inserts. Snapshot-update deltas are exercised engine-side by
-    * IncrementalSpec against the production pipeline. The twin keeps the
-    * simpler UxU rescore set (endpoints of any touched-generated candidate);
-    * production ops/Incremental additionally restricts rescoring to the url
-    * pairs whose candidate set actually changed (delta-proportional P, not
-    * neighborhood UxU) — both forms are proven exact (this oracle row /
-    * IncrementalSpec). */
+    * still exercises every structural case the attach algebra has: new
+    * cross-cluster links (merges), survivors via untouched buckets,
+    * isolated inserts, and bucket eligibility flips (a bucket crossing the
+    * stop-key cap on insert DROPS its existing candidates — edge removal,
+    * cluster splits). No fixture bucket crosses the default cap of 256;
+    * PortableErSpec runs a small cap where some do. Snapshot-update deltas
+    * are exercised engine-side by IncrementalSpec against the production
+    * pipeline (ops/Incremental). */
   def erClustersPortableIncremental(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    val isDelta = substring(md5(col("url")), 1, 1).isin("c", "d", "e", "f")
-
-    // Eager local checkpoints, NOT persist(): each keep() cuts the LOGICAL
-    // plan to a leaf, not just the execution lineage. The attach algebra
-    // references its intermediates multiply (self-joins, unions, old-vs-new
-    // diffs), so with persist() the analyzed plan grows exponentially with
-    // stage depth — measured: analysis time doubling per stage and a driver
-    // analyzer OOM at 800 fixture pages. Checkpoint blocks are reclaimed by
-    // the ContextCleaner once these frames go out of scope.
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-    val okB = keep(portableOk(pages.filter(!isDelta)))
-    val okD = keep(portableOk(pages.filter(isDelta)))
-    val blkB = keep(portableBuckets(portableMen(okB), dict))
-    val blkD = keep(portableBuckets(portableMen(okD), dict))
-    val toksAll = keep(portableToks(okB.unionByName(okD)))
-    // committed base state (in-query here; on disk in a deployment)
-    val edgesB = keep(portableVerify(cappedCandidates(blkB, maxBlock),
-      toksAll, minShared))
-    val clustersB = keep(Clustering.clusters(spark,
-      edgesB.select(col("id_a").as("url_a"), col("id_b").as("url_b"),
-        lit(true).as("is_match")),
-      okB.select("url")))
-
-    // touched buckets: every bucket a delta url enters (inserts-only split
-    // ⇒ no bucket is left). Membership merged, eligibility recomputed —
-    // a bucket crossing the cap drops out WITH its existing candidates.
-    val touched = blkD.select("bucket").distinct()
-    val oldTouchedMembers = blkB.join(broadcast(touched), Seq("bucket"), "left_semi")
-    val newTouchedMembers = oldTouchedMembers.unionByName(blkD)
-    val oldTouchedCands = keep(cappedCandidates(oldTouchedMembers, maxBlock))
-    val newTouchedCands = keep(cappedCandidates(newTouchedMembers, maxBlock))
-
-    // affected url set U: endpoints of touched-generated candidates under
-    // either membership, plus every delta url
-    val affectedUrls = keep(oldTouchedCands.select(col("id_a").as("url"))
-      .union(oldTouchedCands.select(col("id_b").as("url")))
-      .union(newTouchedCands.select(col("id_a").as("url")))
-      .union(newTouchedCands.select(col("id_b").as("url")))
-      .union(okD.select("url"))
-      .distinct())
-
-    // survivors: candidate pairs inside UxU that an UNTOUCHED, still-
-    // eligible bucket generates (untouched membership is unchanged)
-    val blkUntouched = blkB.join(broadcast(touched), Seq("bucket"), "left_anti")
-      .join(affectedUrls.withColumnRenamed("url", "id"), Seq("id"), "left_semi")
-    val eligible = blkB.join(broadcast(touched), Seq("bucket"), "left_anti")
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBlock && col("n") > 1)
-    val inElig = blkUntouched.join(eligible.select("bucket"), Seq("bucket"), "left_semi")
-    val survivors = inElig.as("a").join(inElig.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-
-    // full candidate set for UxU → rescore → changed edges
-    val newCandsUU = newTouchedCands.unionByName(survivors).distinct()
-    val newEdgesUU = keep(portableVerify(newCandsUU, toksAll, minShared))
-    val inU = (c: String) => affectedUrls.withColumnRenamed("url", c)
-    val oldEdgesUU = edgesB
-      .join(inU("id_a"), Seq("id_a"), "left_semi")
-      .join(inU("id_b"), Seq("id_b"), "left_semi")
-    val removed = keep(oldEdgesUU.exceptAll(newEdgesUU))
-    val added = keep(newEdgesUU.exceptAll(oldEdgesUU))
-
-    // dissolve components an edge flip (or a delta url) touches; re-solve
-    // the subgraph; everything else keeps its base label
-    val changedUrls = removed.select(col("id_a").as("url"))
-      .union(removed.select(col("id_b").as("url")))
-      .union(added.select(col("id_a").as("url")))
-      .union(added.select(col("id_b").as("url")))
-      .union(okD.select("url"))
-      .distinct()
-    val affectedLabels = keep(clustersB.join(changedUrls, Seq("url"), "left_semi")
-      .select("cluster_id").distinct())
-    val memberUrls = clustersB
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url")
-    val subNodes = memberUrls.union(okD.select("url")).distinct()
-    val memberEdges = edgesB
-      .join(memberUrls.withColumnRenamed("url", "id_a"), Seq("id_a"), "left_semi")
-    val subEdges = memberEdges.exceptAll(removed).unionByName(added)
-      .select(col("id_a").as("url_a"), col("id_b").as("url_b"),
-        lit(true).as("is_match"))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-
-    val finalAssign = clustersB
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id"))
-    // erClustersPortable output shape: non-representative member counts.
-    keep(finalAssign.filter(col("url") =!= col("cluster_id"))
-      .groupBy("cluster_id")
-      .agg((count(lit(1)) + lit(1)).as("cluster_size")))
+    val ok = portableOk(pages).localCheckpoint(eager = true)
+    val (blk, verify) = erKernel(ok, dict, minShared)
+    val blkAll = blk.withColumn("is_delta", md5Slice(col("id")))
+    val base = DeltaDedup.batch(spark, blkAll.filter(!col("is_delta")),
+      ok.select(col("url").as("id")).filter(!md5Slice(col("id"))), verify,
+      maxBlock, keyFn = identity)
+    clusterSizes(DeltaDedup.attach(spark, blkAll, base.edges, base.assign,
+      verify, maxBlock, keyFn = identity).assign)
+      .localCheckpoint(eager = true)
   }
 
   /** Axis-aligned sign-LSH bucket: the sign pattern of the first nPlanes
@@ -540,11 +404,9 @@ object Portable {
         axisSignBucket(col(vecCol), nPlanes).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val verified = cappedCandidates(bucketed.select("id", "bucket"), maxBucket)
-        .join(bucketed.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-        .join(bucketed.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-        .filter(graft.functions.cosine_sim(col("v_a"), col("v_b")) >= threshold)
-        .select("id_a", "id_b")
+      val verified = DeltaDedup.verifyBy(bucketed,
+          graft.functions.cosine_sim(_, _) >= threshold)(
+        DeltaDedup.cappedPairs(bucketed.select("id", "bucket"), maxBucket))
       Dedup.clusterDups(spark, verified, embs.select(col(idCol)), idCol)
     } finally bucketed.unpersist()
   }

@@ -57,18 +57,31 @@ class PortableErSpec extends SparkSpec {
     a shouldBe run()
   }
 
+  // maxBlock = 8 makes the stop-key cap bind on the fixture: 25 buckets of
+  // the twin's dict+LSH table are eligible (1 < n <= 8) over the ~75% of
+  // urls outside the md5 slice and over-cap over all urls, so the attach
+  // must retract their base pairs and the detach must regenerate them. At
+  // the default 256 no bucket crosses the cap.
+  private val Caps = Seq(256, 8)
+
   test("incremental portable twin equals the full-batch twin (g15 contract)") {
     val p = SparkEntry.FlagshipParams
     val pages = Synth.pages(spark, p).toDF()
     val dict = Synth.dict(spark, p).toDF()
-    val batch = Portable.erClustersPortable(spark, pages, dict)
-      .as[(String, Long)].collect().sortBy(_._1)
-    val incr = Portable.erClustersPortableIncremental(spark, pages, dict)
-      .as[(String, Long)].collect().sortBy(_._1)
     // the 75/25 split is real work on both sides of the attach
     val isDelta = substring(md5(col("url")), 1, 1).isin("c", "d", "e", "f")
     pages.filter(isDelta).select("url").distinct().count() should be > 50L
-    incr shouldBe batch
+    val batches = Caps.map { cap =>
+      val batch = Portable.erClustersPortable(spark, pages, dict, maxBlock = cap)
+        .as[(String, Long)].collect().sortBy(_._1).toSeq
+      val incr = Portable.erClustersPortableIncremental(spark, pages, dict,
+          maxBlock = cap)
+        .as[(String, Long)].collect().sortBy(_._1).toSeq
+      withClue(s"maxBlock=$cap: ") { incr shouldBe batch }
+      batch
+    }
+    // the small cap really binds
+    batches(1) should not be batches(0)
   }
 
   test("detach portable twin equals the full-batch twin of the remainder (g18 contract)") {
@@ -76,11 +89,17 @@ class PortableErSpec extends SparkSpec {
     val pages = Synth.pages(spark, p).toDF()
     val dict = Synth.dict(spark, p).toDF()
     val isDeleted = substring(md5(col("url")), 1, 1).isin("c", "d", "e", "f")
-    val batch = Portable.erClustersPortable(spark, pages.filter(!isDeleted), dict)
-      .as[(String, Long)].collect().sortBy(_._1)
-    val det = Portable.erClustersPortableDetach(spark, pages, dict)
-      .as[(String, Long)].collect().sortBy(_._1)
     pages.filter(isDeleted).select("url").distinct().count() should be > 50L
-    det shouldBe batch
+    val batches = Caps.map { cap =>
+      val batch = Portable.erClustersPortable(spark, pages.filter(!isDeleted),
+          dict, maxBlock = cap)
+        .as[(String, Long)].collect().sortBy(_._1).toSeq
+      val det = Portable.erClustersPortableDetach(spark, pages, dict,
+          maxBlock = cap)
+        .as[(String, Long)].collect().sortBy(_._1).toSeq
+      withClue(s"maxBlock=$cap: ") { det shouldBe batch }
+      batch
+    }
+    batches(1) should not be batches(0)
   }
 }

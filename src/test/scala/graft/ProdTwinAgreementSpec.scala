@@ -44,17 +44,33 @@ class ProdTwinAgreementSpec extends SparkSpec {
     prod shouldBe twin
   }
 
+  // maxBucket = 3 makes the stop-key cap bind on sf0.01: 63 md5 band
+  // buckets are eligible (1 < n <= 3) over the ~75% of documents outside
+  // the md5 slice and over-cap over all documents, so the g16 attach must
+  // retract their base pairs and the g17 detach must regenerate them (a cap
+  // of 8 crosses 18 buckets but leaves the final clusters unchanged). At
+  // the default 256 no bucket crosses the cap.
+  private val Caps = Seq(256, 3)
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.as[(Long, Long)].collect().toSet
+
+  private def shingles = Dedup.charShingles(lower(col("text")), 5)
+
   test("g16: incremental minhash near-dup twin == full-batch twin on sf0.01") {
     // the g16 contract: attaching the deterministic ~25% delta slice to the
     // ~75% base dedup state reproduces the from-scratch dedup exactly (the
     // DuckDB oracle replays the batch SQL; this is the engine-side pin)
-    val batch = Portable.nearDupMd5(spark, docs(), "doc_id",
-        Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)
-      .as[(Long, Long)].collect().toSet
-    val incr = Portable.nearDupMd5Incremental(spark, docs(), "doc_id",
-        Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)
-      .as[(Long, Long)].collect().toSet
-    incr shouldBe batch
+    val batches = Caps.map { cap =>
+      val batch = pairs(Portable.nearDupMd5(spark, docs(), "doc_id", shingles,
+        threshold = 0.8, maxBucket = cap))
+      val incr = pairs(Portable.nearDupMd5Incremental(spark, docs(), "doc_id",
+        shingles, threshold = 0.8, maxBucket = cap))
+      withClue(s"maxBucket=$cap: ") { incr shouldBe batch }
+      batch
+    }
+    // the small cap really binds
+    batches(1) should not be batches(0)
   }
 
   test("g17: detach twin == full-batch twin over the remaining corpus") {
@@ -65,12 +81,14 @@ class ProdTwinAgreementSpec extends SparkSpec {
     val remaining = docs().filter(
       !substring(md5(col("doc_id").cast("string")), 1, 1)
         .isin("c", "d", "e", "f"))
-    val batch = Portable.nearDupMd5(spark, remaining, "doc_id",
-        Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)
-      .as[(Long, Long)].collect().toSet
-    val det = Portable.nearDupMd5Detach(spark, docs(), "doc_id",
-        Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)
-      .as[(Long, Long)].collect().toSet
-    det shouldBe batch
+    val batches = Caps.map { cap =>
+      val batch = pairs(Portable.nearDupMd5(spark, remaining, "doc_id",
+        shingles, threshold = 0.8, maxBucket = cap))
+      val det = pairs(Portable.nearDupMd5Detach(spark, docs(), "doc_id",
+        shingles, threshold = 0.8, maxBucket = cap))
+      withClue(s"maxBucket=$cap: ") { det shouldBe batch }
+      batch
+    }
+    batches(1) should not be batches(0)
   }
 }

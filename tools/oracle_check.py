@@ -4,6 +4,7 @@ query dumped by `graft.Verify <sfDir> <outDir>`, run the DuckDB oracle SQL on
 the same parquet tables and compare rows / schema / value-hash the way the
 driver does (columns sorted by name, rows sorted by all columns, pandas value
 hash). Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
+Exits 1 when any query is BAD (an error, or a row/schema/hash mismatch).
 """
 import glob
 import json
@@ -21,7 +22,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> None:
+def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for tbl in ("region", "nation", "customer", "supplier", "part", "orders",
                 "lineitem", "events", "documents", "embeddings"):
@@ -71,7 +72,8 @@ def main(sf_dir: str, out_dir: str) -> None:
            if v.get("err") not in (None, "no_oracle") or
            (v.get("err") is None and not v.get("hash_match"))]
     print(f"GREEN: {len(report) - len(bad)}/{len(report)}  BAD: {bad}")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
