@@ -57,11 +57,13 @@ object Main {
 
     val p = SynthParams(nPages = nPages, nEntities = nEntities)
     val fit = args.contains("--fit")
-    // --durable-cc: CC lineage cuts commit to parquet instead of BlockManager
-    // localCheckpoints — at 9.6M+ pages the accumulated per-round cached
-    // blocks plus 32 concurrent sort tasks OOM'd a 56g heap; durable cuts
-    // trade a few parquet round-trips for zero storage-memory pinning (the
-    // config the PipelineConfig doc prescribes for the largest runs)
+    // --durable-cc: CC loop lineage cuts commit to parquet instead of
+    // BlockManager localCheckpoints — at 9.6M+ pages the accumulated
+    // per-round cached blocks plus 32 concurrent sort tasks OOM'd a 56g heap;
+    // durable cuts trade a few parquet round-trips for zero storage-memory
+    // pinning (the config the PipelineConfig doc prescribes for the largest
+    // runs). No effect when the edge set is small enough for CC to finish
+    // on the driver (ops/Clustering).
     val cfg = PipelineConfig(checkpointDir = checkpointDir, resume = resume,
       fitWeights = fit,
       ccDurableIterations = args.contains("--durable-cc"),

@@ -36,11 +36,13 @@ case class PipelineConfig(
     ctxWindow: Int = 4,
     seed: Long = 42L,
     runId: String = "run",
-    /** When true, every CC lineage cut commits to parquet under <ckpt>/cc/ so
-      * a crash mid-clustering resumes inside the loop; when false (default),
-      * cuts use localCheckpoint and only the final clusters table is durable.
-      * At 10^12-doc scale set true; at bench scale the per-cut parquet
-      * round-trips dominate CC wall time. */
+    /** When true, every CC loop round's lineage cut commits to parquet
+      * under <ckpt>/cc/ instead of a localCheckpoint, so the loop pins no
+      * storage memory; when false (default), only the final clusters table
+      * is durable. Applies only when CC runs its distributed loop — an edge
+      * set under the driver byte budget finishes on the driver with no
+      * per-round cuts (ops/Clustering). At 10^12-doc scale set true; at
+      * bench scale the per-cut parquet round-trips dominate CC wall time. */
     ccDurableIterations: Boolean = false,
     /** Scoring hydration join strategy: Some(true)/Some(false) force
       * broadcast/shuffle of the mentions projection; None (default) decides
@@ -68,19 +70,14 @@ case class PipelineConfig(
       * checkpoint — is at most this. Sized by BYTES, not rows: the projection
       * carries ctx strings whose width varies 100x with ctxWindow, and a
       * row-count gate could sail past Spark's 8 GiB broadcast-table hard
-      * limit (and driver memory) on wide contexts. Default -1 = derive from
-      * the compute topology: min(2 GiB, driver max heap / 10) — the driver
-      * must also hold the CC loop's bookkeeping, and the broadcast build is
-      * the pipeline's one driver-serial term (measured ~506s at 9.6M pages
-      * on a 7.75M-row projection), so a fixed 2 GiB cap was generous for
-      * small drivers (round-4 advice). */
+      * limit (and driver memory) on wide contexts. Default -1 = the driver
+      * byte budget (graft.DriverBudget). */
     broadcastMentionsMaxBytes: Long = -1L) {
 
-  /** Resolved broadcast cap: explicit positive value, or the heap-derived
-    * default. */
+  /** Resolved broadcast cap: explicit non-negative value, or the driver
+    * byte budget. */
   def resolvedBroadcastMentionsMaxBytes: Long =
-    if (broadcastMentionsMaxBytes >= 0) broadcastMentionsMaxBytes
-    else math.min(2L * 1024 * 1024 * 1024, Runtime.getRuntime.maxMemory / 10)
+    DriverBudget.orDefault(broadcastMentionsMaxBytes)
 }
 
 case class PipelineResult(
@@ -185,7 +182,7 @@ object Pipeline {
       val dropped = Blocking.cappedDropCount(blocks, cfg.maxBlock)
       val write = Future {
         Metrics.countMetric(spark, cfg.runId, "s2_blocks",
-            "dropped_mentions", dropped)
+            "dropped_mentions" -> dropped)
           .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
       }(metricsEc)
       pending += write
@@ -217,9 +214,8 @@ object Pipeline {
         val wallMs = (System.nanoTime() - t0) / 1000000L
         val write = Future {
           Metrics.countMetric(spark, cfg.runId, "s4_scored",
-              "hydrate_broadcast", if (choice) 1L else 0L)
-            .unionByName(Metrics.countMetric(spark, cfg.runId, "s4_scored",
-              "hydrate_est_bytes", bytes))
+              "hydrate_broadcast" -> (if (choice) 1L else 0L),
+              "hydrate_est_bytes" -> bytes)
             .withColumn("wall_ms", lit(wallMs))
             .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
         }(metricsEc)
@@ -248,15 +244,31 @@ object Pipeline {
         broadcastMentions = bcast)
     }
 
+    var cc: Option[Clustering.Decision] = None
     val clusters = stage(spark, cfg, "s5_clusters", pending) {
       // CC partitions scale with data on a slow ramp (Partitioning doc):
       // pages.count() is a metadata-cheap read of the committed s0 parquet
       val ccParts = Partitioning.ccPartitions(
         spark.sparkContext.defaultParallelism, pages.count())
-      Clustering.clusters(spark, scored,
+      val c = Clustering.clustered(spark, scored,
         pages.filter(col("lang") === "en" && col("invariant_ok")),
         if (cfg.ccDurableIterations) Some(s"${cfg.checkpointDir}/cc") else None,
         partitions = Some(ccParts))
+      cc = Some(c.decision)
+      c.assign
+    }
+    // how CC finished is lineage too: driver or loop, the measured input,
+    // and the loop's rounds to convergence (counter rows cc_local=1/0,
+    // cc_input_edges, cc_est_bytes, cc_rounds)
+    cc.foreach { d =>
+      pending += Future {
+        Metrics.countMetric(spark, cfg.runId, "s5_clusters",
+            "cc_local" -> (if (d.local) 1L else 0L),
+            "cc_input_edges" -> d.inputEdges,
+            "cc_est_bytes" -> d.estBytes,
+            "cc_rounds" -> d.rounds.toLong)
+          .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
+      }(metricsEc)
     }
 
     // per-document taxonomy rollup (reference step9 admission-level agg):

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Transitive clustering: connected components over the match-edge graph via
   * iterative large-star / small-star (Kiveris et al., "Connected Components
@@ -14,15 +15,22 @@ import org.apache.spark.sql.functions._
   * (`main_scripts/step9_processing_all_documents.py:241-252`) generalized to
   * true transitive closure (SURVEY.md §2.11).
   *
-  * Scale notes:
-  *  - each iteration is groupBy(min) + join back — both hash-partitioned on
-  *    the node id, so successive iterations reuse the same partitioning;
-  *  - lineage is cut EVERY iteration (localCheckpoint or parquet checkpoint)
-  *    — without this, Catalyst analysis time explodes superlinearly
-  *    (SURVEY.md §4.2.2);
-  *  - iteration count is O(log n) in component size; convergence is detected
-  *    by an aggregate checksum of the edge set, not a driver-side collect of
-  *    data rows.
+  * Scale notes — two regimes, chosen per call by the measured input size:
+  *  - an edge set below the driver byte budget (graft.DriverBudget) is
+  *    collected once and finished by union-find on the driver: one job
+  *    instead of O(log n) rounds whose per-job planning, codegen and
+  *    scheduling dominate a small graph (traced 2,000-page run, 4 cores:
+  *    s5 29 -> 11 jobs, 11.0 -> 1.45 MB scanned);
+  *  - above it the distributed loop runs: each iteration is groupBy(min) +
+  *    join back — both hash-partitioned on the node id, so successive
+  *    iterations reuse the same partitioning; lineage is cut EVERY iteration
+  *    (localCheckpoint or parquet checkpoint) — without this, Catalyst
+  *    analysis time explodes superlinearly (SURVEY.md §4.2.2); iteration
+  *    count is O(log n) in component size; convergence is detected by an
+  *    aggregate checksum of the edge set, not a driver-side collect of data
+  *    rows.
+  * Both regimes emit the same rows: (node, component minimum) for every
+  * non-root node.
   */
 object Clustering {
 
@@ -65,59 +73,132 @@ object Clustering {
     coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
       lit(0).cast("decimal(38,0)")).as("h"))
 
-  private def checksumOf(row: org.apache.spark.sql.Row): (Long, BigDecimal) =
-    (row.getLong(0), BigDecimal(row.getDecimal(1)))
+  /** How one connected-components call finished: on the driver (`local`)
+    * or in the distributed loop; the distinct input edges, their estimated
+    * driver-side size, and the loop's rounds to convergence (0 on the
+    * driver). */
+  final case class Decision(local: Boolean, inputEdges: Long, estBytes: Long,
+      rounds: Int)
+
+  /** A (url, cluster_id) assignment together with the decision that made it. */
+  final case class Components(assign: DataFrame, decision: Decision)
+
+  /** Driver-side bytes per collected edge beyond its UTF-8 payload: the Row,
+    * two String objects and the union-find map entry. */
+  private val EdgeOverheadBytes = 200L
 
   /** Connected components over undirected string edges (u, v).
-    * Returns (node, cluster_id) where cluster_id = min node of the component.
-    * `checkpointDir`: when set, each materialization persists to parquet
-    * (resumable lineage cut); otherwise localCheckpoint is used (tests).
-    * `roundsPerCut`: large+small-star rounds fused into ONE materialization
-    * barrier. DEFAULT 1: both star transforms reference their input several
-    * times (union + agg + join), so an un-materialized previous round is
-    * RE-EXECUTED 4-6x inside the fused plan — measured at 600k pages, 2
-    * rounds/cut made CC 1.6x SLOWER (41s vs 26s) despite halving barriers.
-    * Fusing only pays where the barrier (driver coordination + commit)
-    * dominates recomputation, e.g. parquet-durable cuts on a slow store;
-    * the knob stays for that regime. Convergence still checks the checksum
-    * of EVERY fused round (all observations ride the same job), so fusing
-    * never changes the result. Throws on non-convergence within maxIter
-    * rounds — returning a half-converged edge set as final clusters would be
-    * silently wrong downstream.
+    * Returns (node, cluster_id) for every non-root node, where cluster_id =
+    * min node of the component (roots are absent).
+    *
+    * The distinct input edge set is cut once, eagerly; an Observation on
+    * that cut measures its rows and payload bytes at no extra job. When
+    * rows × EdgeOverheadBytes + payload is below `driverBudgetBytes` (default
+    * graft.DriverBudget; 0 always takes the loop) the cut is collected and
+    * finished by union-find on the driver: a fixture- or delta-sized graph
+    * otherwise pays O(log n) rounds of per-job planning, codegen and
+    * scheduling for a few thousand edges. Above the budget the
+    * large/small-star loop runs.
+    *
+    * Loop only: `checkpointDir`, when set, persists each round's cut to
+    * parquet (resumable lineage cut; otherwise localCheckpoint);
+    * `partitions` sizes the per-round shuffles; the loop throws on
+    * non-convergence within maxIter rounds — returning a half-converged edge
+    * set as final clusters would be silently wrong downstream.
     */
   def connectedComponents(spark: SparkSession, edges0: DataFrame,
       checkpointDir: Option[String] = None, maxIter: Int = 50,
-      roundsPerCut: Int = 1, partitions: Option[Int] = None): DataFrame = {
-    // CC is coordination-bound: O(log n) rounds of SMALL shuffles. A
-    // data-scaled global shuffle-partition setting (right for the one-pass
-    // stages) multiplies per-round task count and made CC 3.5x slower at
-    // 2.4M pages (54s -> 189s at 32 -> 256 partitions, measured). So CC's
-    // shuffles default to the core count (session setting restored after) —
-    // but a flat pin OOMs once edges/cores no longer fits a task's sort
-    // (9.6M pages / 56g heap, measured): large inputs must pass a
-    // data-scaled `partitions` (Partitioning.ccPartitions; Pipeline does).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // CC rounds are NOT CPU-heavy per byte (hash agg + join over two id
-    // columns), so AQE's byte-targeted coalescing is the right parallelism
-    // policy inside the loop: a fixture-sized round collapses to 1-2 tasks
-    // (the per-round task overhead across ~10 rounds dominated small-graph
-    // CC; measured 2-3x on the 800-page flagship fixture), while a 10^8-edge
-    // round still fans out to advisory-sized partitions. parallelismFirst
-    // (the default) would instead hold every tiny round at defaultParallelism
-    // tasks. Session value restored after the loop — the one-pass stages
-    // (scoring) ARE CPU-heavy per byte and need parallelism-first (measured
-    // 3x slower at 50k pages under byte-targeted coalescing).
-    // Materialize the INPUT edge set BEFORE entering the CC conf scope: the
-    // caller's un-materialized upstream (blocking + scoring in entry(), the
-    // band self-join + verification in the near-dup family) would otherwise
+      partitions: Option[Int] = None,
+      driverBudgetBytes: Long = graft.DriverBudget.bytes): DataFrame =
+    components(spark, edges0, checkpointDir, maxIter, partitions,
+      driverBudgetBytes).assign
+
+  /** connectedComponents with the decision that produced it. */
+  def components(spark: SparkSession, edges0: DataFrame,
+      checkpointDir: Option[String] = None, maxIter: Int = 50,
+      partitions: Option[Int] = None,
+      driverBudgetBytes: Long = graft.DriverBudget.bytes): Components = {
+    // Materialize the INPUT edge set before any CC-scoped conf: the caller's
+    // un-materialized upstream (blocking + scoring in entry(), the band
+    // self-join + verification in the near-dup family) would otherwise
     // execute inside the loop's byte-targeted coalescing and get starved of
     // parallelism — those subtrees are CPU-heavy per byte, exactly what the
     // scoped confs are wrong for (measured: the whole 800-page flagship
     // upstream ran as CC "round 0" at ~12s). One eager cut of the distinct
     // edge set, executed under the session's own parallelism policy.
+    val size = org.apache.spark.sql.Observation("cc_input")
     val edgesIn = edges0.select(col("u"), col("v"))
       .filter(col("u") =!= col("v")).distinct()
+      .observe(size, count(lit(1)).as("n"), coalesce(
+        sum(octet_length(col("u")).cast("long") + octet_length(col("v"))),
+        lit(0L)).as("payload"))
       .localCheckpoint(true)
+    val measured = size.get
+    val n = measured("n").asInstanceOf[Long]
+    val est = measured("payload").asInstanceOf[Long] + n * EdgeOverheadBytes
+    if (est < driverBudgetBytes)
+      Components(unionFind(spark, edgesIn.collect()), Decision(true, n, est, 0))
+    else {
+      val (assign, rounds) = withLoopConfs(spark, partitions)(
+        loop(spark, edgesIn, checkpointDir, maxIter))
+      Components(assign, Decision(false, n, est, rounds))
+    }
+  }
+
+  /** Driver finish: union-find whose root is always the smallest node of its
+    * set, so every non-root node ends labeled with its component minimum —
+    * the rows the converged loop emits, as a local DataFrame. Nodes are
+    * ordered as Spark orders strings (UTF-8 bytes), not by String.compareTo
+    * (UTF-16 units), which disagrees past the surrogate range. */
+  private def unionFind(spark: SparkSession,
+      edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[UTF8String, UTF8String]
+    // iterative with path compression: insertion order can build chains as
+    // long as the component, too deep for a recursive find
+    def find(x: UTF8String): UTF8String = {
+      var r = x
+      var p = parent.getOrElse(r, r)
+      while (p != r) { r = p; p = parent.getOrElse(r, r) }
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    edges.foreach { e =>
+      val a = find(UTF8String.fromString(e.getString(0)))
+      val b = find(UTF8String.fromString(e.getString(1)))
+      val c = a.binaryCompare(b)
+      if (c < 0) parent(b) = a else if (c > 0) parent(a) = b
+    }
+    import spark.implicits._
+    parent.keys.toSeq.map(k => (k.toString, find(k).toString))
+      .toDF("url", "cluster_id")
+  }
+
+  /** Run `body` under the loop's conf scope; the session values are
+    * restored after.
+    *
+    * CC is coordination-bound: O(log n) rounds of SMALL shuffles. A
+    * data-scaled global shuffle-partition setting (right for the one-pass
+    * stages) multiplies per-round task count and made CC 3.5x slower at
+    * 2.4M pages (54s -> 189s at 32 -> 256 partitions, measured). So CC's
+    * shuffles default to the core count — but a flat pin OOMs once
+    * edges/cores no longer fits a task's sort (9.6M pages / 56g heap,
+    * measured): large inputs must pass a data-scaled `partitions`
+    * (Partitioning.ccPartitions; Pipeline does).
+    *
+    * CC rounds are NOT CPU-heavy per byte (hash agg + join over two id
+    * columns), so AQE's byte-targeted coalescing is the right parallelism
+    * policy inside the loop: a small round collapses to 1-2 tasks (the
+    * per-round task overhead dominated small-graph CC; measured 2-3x on the
+    * 800-page flagship fixture), while a 10^8-edge round still fans out to
+    * advisory-sized partitions.
+    * parallelismFirst (the default) would instead hold every tiny round at
+    * defaultParallelism tasks. The one-pass stages (scoring) ARE CPU-heavy
+    * per byte and need parallelism-first (measured 3x slower at 50k pages
+    * under byte-targeted coalescing), hence the scope. */
+  private def withLoopConfs[T](spark: SparkSession, partitions: Option[Int])(
+      body: => T): T = {
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     val advKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val prevPf = spark.conf.getOption(pfKey)
@@ -130,7 +211,7 @@ object Clustering {
     // each >> 1m) is untouched, a mid-size graph keeps a handful of tasks,
     // and only genuinely tiny rounds collapse to 1
     spark.conf.set(advKey, "1m")
-    try connectedComponentsInner(spark, edgesIn, checkpointDir, maxIter, roundsPerCut)
+    try body
     finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       prevPf match {
@@ -144,39 +225,29 @@ object Clustering {
     }
   }
 
-  /** Inner loop; `edges0` must already be the distinct (u, v) edge set,
-    * materialized by the caller (connectedComponents cuts it before
-    * scoping the loop confs). */
-  private def connectedComponentsInner(spark: SparkSession, edges0: DataFrame,
-      checkpointDir: Option[String], maxIter: Int,
-      roundsPerCut: Int): DataFrame = {
+  /** The large/small-star loop over the materialized distinct edge set:
+    * one lineage cut per round, convergence by the Observation-attached
+    * checksum of the round's output. Returns the converged assignment and
+    * the rounds it took. */
+  private def loop(spark: SparkSession, edges0: DataFrame,
+      checkpointDir: Option[String], maxIter: Int): (DataFrame, Int) = {
     var edges = edges0
     var last: (Long, BigDecimal) = (-1L, BigDecimal(-1))
     var round = 0
     var converged = false
     var prevCutPath: Option[String] = None
     while (!converged && round < maxIter) {
-      val roundsThisCut = math.min(roundsPerCut, maxIter - round)
-      var next = edges
-      val obs = (0 until roundsThisCut).map { r =>
-        val o = org.apache.spark.sql.Observation(s"cc_round_${round + r}")
-        next = smallStar(largeStar(next))
-          .observe(o, checksumExprs.head, checksumExprs.tail: _*)
-        o
-      }
-      val t0 = System.nanoTime()
+      val obs = org.apache.spark.sql.Observation(s"cc_round_$round")
+      val next = smallStar(largeStar(edges))
+        .observe(obs, checksumExprs.head, checksumExprs.tail: _*)
       val cut = checkpointDir match {
         case Some(dir) =>
-          val ri = round + roundsThisCut - 1
-          val path = s"$dir/cc_round_$ri"
+          val path = s"$dir/cc_round_$round"
           next.write.mode("overwrite").parquet(path)
           // the PREVIOUS cut fed this write and is never read again (no
           // mid-loop resume is implemented; the caller reads only the FINAL
-          // cut) — delete it once the new cut's write has committed. Tracked
-          // by actual path, not index arithmetic: with roundsPerCut >= 2 the
-          // cut indices are spaced roundsThisCut apart, so a hardcoded ri-2
-          // never names a cut and GB-scale cuts would accumulate
-          // (round-4 advice). At 9.6M pages each cut is GBs.
+          // cut) — delete it once the new cut's write has committed. At
+          // 9.6M pages each cut is GBs.
           prevCutPath.map(new java.io.File(_)).filter(_.exists()).foreach(f =>
             scala.reflect.io.Directory(f).deleteRecursively())
           prevCutPath = Some(path)
@@ -184,38 +255,41 @@ object Clustering {
         case None =>
           next.localCheckpoint(eager = true)
       }
-      obs.foreach { o =>
-        val row = o.get
-        val cs = (row("c").asInstanceOf[Long],
-          BigDecimal(row("h").asInstanceOf[java.math.BigDecimal]))
-        converged ||= cs == last
-        last = cs
-      }
-      // per-round diagnostics (dev only): GRAFT_CC_VERBOSE=1
-      if (sys.env.get("GRAFT_CC_VERBOSE").contains("1"))
-        println(f"[cc] round=$round wall=${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"edges=${last._1} converged=$converged")
+      val cs = (obs.get("c").asInstanceOf[Long],
+        BigDecimal(obs.get("h").asInstanceOf[java.math.BigDecimal]))
+      converged = cs == last
+      last = cs
       edges = cut
-      round += roundsThisCut
+      round += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter rounds — " +
           "refusing to return a partial clustering")
     // converged edge set is (node -> component-min) star edges
-    edges.select(col("u").as("url"), col("v").as("cluster_id"))
+    (edges.select(col("u").as("url"), col("v").as("cluster_id")), round)
   }
 
   /** Cluster assignment for every node that appears in `nodes`: CC labels for
     * connected nodes, self-cluster for isolated ones. */
   def clusters(spark: SparkSession, matchPairs: DataFrame, nodes: DataFrame,
       checkpointDir: Option[String] = None,
-      partitions: Option[Int] = None): DataFrame = {
+      partitions: Option[Int] = None,
+      driverBudgetBytes: Long = graft.DriverBudget.bytes): DataFrame =
+    clustered(spark, matchPairs, nodes, checkpointDir, partitions,
+      driverBudgetBytes).assign
+
+  /** clusters with the CC decision that produced it. */
+  def clustered(spark: SparkSession, matchPairs: DataFrame, nodes: DataFrame,
+      checkpointDir: Option[String] = None,
+      partitions: Option[Int] = None,
+      driverBudgetBytes: Long = graft.DriverBudget.bytes): Components = {
     val edges = matchPairs.filter(col("is_match"))
       .select(col("url_a").as("u"), col("url_b").as("v"))
-    val cc = connectedComponents(spark, edges, checkpointDir, partitions = partitions)
-    nodes.select(col("url")).distinct()
-      .join(cc, Seq("url"), "left")
-      .select(col("url"), coalesce(col("cluster_id"), col("url")).as("cluster_id"))
+    val cc = components(spark, edges, checkpointDir, partitions = partitions,
+      driverBudgetBytes = driverBudgetBytes)
+    cc.copy(assign = nodes.select(col("url")).distinct()
+      .join(cc.assign, Seq("url"), "left")
+      .select(col("url"), coalesce(col("cluster_id"), col("url")).as("cluster_id")))
   }
 }

@@ -117,14 +117,14 @@ object Metrics {
         lit(runId).as("run_id"), lit(stage).as("stage"),
         col("partition_id"), col("rows"), lit(wallMs).as("wall_ms"))
 
-  /** One named-counter lineage row (e.g. mentions dropped by the block cap),
-    * schema-compatible with stageMetrics so it appends into the same metrics
-    * table: stage = "<stage>/<counter>", partition_id = -1 (whole-stage),
-    * rows = the count. */
+  /** Named-counter lineage rows (e.g. mentions dropped by the block cap),
+    * one per (counter, count), schema-compatible with stageMetrics so they
+    * append into the same metrics table: stage = "<stage>/<counter>",
+    * partition_id = -1 (whole-stage), rows = the count. */
   def countMetric(spark: org.apache.spark.sql.SparkSession, runId: String,
-      stage: String, counter: String, n: Long): DataFrame = {
+      stage: String, counters: (String, Long)*): DataFrame = {
     import spark.implicits._
-    Seq((runId, s"$stage/$counter", -1, n, 0L))
+    counters.map { case (counter, n) => (runId, s"$stage/$counter", -1, n, 0L) }
       .toDF("run_id", "stage", "partition_id", "rows", "wall_ms")
   }
 }

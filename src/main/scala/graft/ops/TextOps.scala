@@ -125,8 +125,7 @@ object TextOps {
       idCol: String = "doc_id", textCol: String = "text",
       n: Int = 8,
       /** Max estimated bytes of the exploded eval n-gram table to
-        * broadcast; <0 derives min(2 GiB, driver heap / 10) — the same
-        * policy as PipelineConfig.resolvedBroadcastMentionsMaxBytes. */
+        * broadcast; <0 derives the driver byte budget (graft.DriverBudget). */
       broadcastEvalMaxBytes: Long = -1L): DataFrame = {
     // token array projected FIRST, n-grams built from the attribute — the
     // one-select composition re-evaluates the tokenizer inside every lambda
@@ -138,9 +137,7 @@ object TextOps {
         explode(Portable.wordNgramsFromTokens(col("__tk"), n)).as("ng"))
     val evalNg = ngrams(evalDocs, col(idCol)).withColumnRenamed("__id", "eval_id")
     val trainNg = ngrams(train, col(idCol)).withColumnRenamed("__id", idCol)
-    val cap =
-      if (broadcastEvalMaxBytes >= 0) broadcastEvalMaxBytes
-      else math.min(2L * 1024 * 1024 * 1024, Runtime.getRuntime.maxMemory / 10)
+    val cap = graft.DriverBudget.orDefault(broadcastEvalMaxBytes)
     val evalBytes = evalNg.agg(coalesce(
       sum(octet_length(col("ng")).cast("long") + lit(24L)),
       lit(0L))).head().getLong(0)

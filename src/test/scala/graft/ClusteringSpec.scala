@@ -1,54 +1,75 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ops.Clustering
 
 /** CC unit graphs per SURVEY.md §5.2: chain, star, two components,
-  * self-loop; label = min node of the component (property). */
+  * self-loop; label = min node of the component (property). Every graph runs
+  * through both regimes: a budget of 0 forces the distributed loop, the
+  * default driver budget finishes these small graphs on the driver. */
 class ClusteringSpec extends SparkSpec {
   import spark.implicits._
 
-  private def cc(edges: Seq[(String, String)]): Map[String, String] = {
-    val df = edges.toDF("u", "v")
-    Clustering.connectedComponents(spark, df)
-      .as[(String, String)].collect().toMap
+  private val regimes = Seq("loop" -> 0L, "driver" -> DriverBudget.bytes)
+
+  private def ccRows(edges: Seq[(String, String)], budget: Long): Seq[(String, String)] =
+    Clustering.connectedComponents(spark, edges.toDF("u", "v"),
+      driverBudgetBytes = budget).as[(String, String)].collect().toSeq
+
+  /** Run `check` on the graph's labels under each regime. */
+  private def inBothRegimes(edges: Seq[(String, String)])(
+      check: Map[String, String] => Unit): Unit =
+    regimes.foreach { case (name, budget) =>
+      withClue(s"[$name] ") { check(ccRows(edges, budget).toMap) }
+    }
+
+  /** Seeded random graph over `n` nodes named with `prefix`. */
+  private def randomGraph(seed: Int, prefix: String, n: Int,
+      m: Int): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val nodes = (0 until n).map(i => f"$prefix$i%02d")
+    (0 until m).map { _ =>
+      (nodes(rnd.nextInt(nodes.size)), nodes(rnd.nextInt(nodes.size)))
+    }.filter { case (a, b) => a != b }
   }
 
   test("two components") {
-    val m = cc(Seq(("a", "b"), ("b", "c"), ("x", "y")))
-    m("b") shouldBe "a"
-    m("c") shouldBe "a"
-    m("y") shouldBe "x"
-    m.get("a").foreach(_ shouldBe "a") // root may or may not self-report
+    inBothRegimes(Seq(("a", "b"), ("b", "c"), ("x", "y"))) { m =>
+      m("b") shouldBe "a"
+      m("c") shouldBe "a"
+      m("y") shouldBe "x"
+      m.get("a").foreach(_ shouldBe "a") // root may or may not self-report
+    }
   }
 
   test("long chain converges (log-round large/small star)") {
     val n = 64
     val chain = (0 until n - 1).map(i => (f"n$i%03d", f"n${i + 1}%03d"))
-    val m = cc(chain)
-    (1 until n).foreach { i => m(f"n$i%03d") shouldBe "n000" }
+    // reversed insertion order builds the deepest union-find chains
+    Seq(chain, chain.reverse.map(_.swap)).foreach { edges =>
+      inBothRegimes(edges) { m =>
+        (1 until n).foreach { i => m(f"n$i%03d") shouldBe "n000" }
+      }
+    }
   }
 
   test("star graph") {
-    val m = cc((1 to 10).map(i => ("hub", f"leaf$i%02d")))
-    // min node is "hub" lexicographically < "leafXX"
-    (1 to 10).foreach { i => m(f"leaf$i%02d") shouldBe "hub" }
+    inBothRegimes((1 to 10).map(i => ("hub", f"leaf$i%02d"))) { m =>
+      // min node is "hub" lexicographically < "leafXX"
+      (1 to 10).foreach { i => m(f"leaf$i%02d") shouldBe "hub" }
+    }
   }
 
   test("self loops and duplicate edges are harmless") {
-    val m = cc(Seq(("a", "a"), ("a", "b"), ("b", "a"), ("a", "b")))
-    m("b") shouldBe "a"
+    inBothRegimes(Seq(("a", "a"), ("a", "b"), ("b", "a"), ("a", "b"))) { m =>
+      m("b") shouldBe "a"
+      m.contains("a") shouldBe false
+    }
   }
 
   test("property: every node's label is the component minimum") {
-    // random graph, seeded; compare against a driver-side union-find oracle
-    val rnd = new scala.util.Random(7)
-    val nodes = (0 until 60).map(i => f"v$i%02d")
-    val edges = (0 until 80).map { _ =>
-      (nodes(rnd.nextInt(nodes.size)), nodes(rnd.nextInt(nodes.size)))
-    }.filter { case (a, b) => a != b }
-    // oracle union-find
+    // random graph, seeded; compare against a test-local union-find oracle
+    val edges = randomGraph(7, "v", 60, 80)
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
     def find(x: String): String = {
       var r = x; while (parent(r) != r) r = parent(r); r
@@ -57,47 +78,62 @@ class ClusteringSpec extends SparkSpec {
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.Ordering[String].max(ra, rb)) = math.Ordering[String].min(ra, rb)
     }
-    val expected = nodes.map(n => n -> find(n)).toMap
-    val m = cc(edges)
-    edges.flatMap(e => Seq(e._1, e._2)).distinct.foreach { n =>
-      m.getOrElse(n, n) shouldBe expected(n)
+    inBothRegimes(edges) { m =>
+      nodes.foreach { n => m.getOrElse(n, n) shouldBe find(n) }
     }
   }
 
   test("non-convergence within maxIter throws instead of returning partial clusters") {
+    // the loop only: the driver finish has no round limit to hit
     val chain = (0 until 40).map(i => (f"n$i%03d", f"n${i + 1}%03d"))
     val e = intercept[IllegalStateException] {
-      Clustering.connectedComponents(spark, chain.toDF("u", "v"), maxIter = 1)
-        .collect()
+      Clustering.connectedComponents(spark, chain.toDF("u", "v"), maxIter = 1,
+        driverBudgetBytes = 0L).collect()
     }
     e.getMessage should include("did not converge")
   }
 
-  test("roundsPerCut=1 and =3 produce identical clusterings") {
-    val rnd = new scala.util.Random(11)
-    val nodes = (0 until 40).map(i => f"w$i%02d")
-    val edges = (0 until 50).map { _ =>
-      (nodes(rnd.nextInt(nodes.size)), nodes(rnd.nextInt(nodes.size)))
-    }.filter { case (a, b) => a != b }
-    val df = edges.toDF("u", "v")
-    val m1 = Clustering.connectedComponents(spark, df, roundsPerCut = 1)
-      .as[(String, String)].collect().toMap
-    val m3 = Clustering.connectedComponents(spark, df, roundsPerCut = 3)
-      .as[(String, String)].collect().toMap
-    val covered = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    covered.foreach { n => m1.getOrElse(n, n) shouldBe m3.getOrElse(n, n) }
+  test("loop and driver finish produce identical clusterings") {
+    val edges = randomGraph(11, "w", 40, 50)
+    val loop = ccRows(edges, 0L)
+    loop should not be empty
+    ccRows(edges, DriverBudget.bytes).sorted shouldBe loop.sorted
+    // Spark orders strings by UTF-8 bytes: U+E000 < U+F000 < U+1F600, while
+    // String.compareTo's UTF-16 order puts the surrogate pair first
+    val wide = Seq(("\uE000", "\uD83D\uDE00"), ("\uD83D\uDE00", "\uF000"))
+    ccRows(wide, DriverBudget.bytes).toMap shouldBe ccRows(wide, 0L).toMap
+    ccRows(wide, 0L).toMap shouldBe Map("\uD83D\uDE00" -> "\uE000", "\uF000" -> "\uE000")
+  }
+
+  test("the driver budget gates the regime on the measured input") {
+    // 4 distinct non-loop edges, 2 UTF-8 bytes per endpoint
+    val df = Seq(("aa", "bb"), ("bb", "aa"), ("bb", "cc"), ("cc", "cc"),
+      ("dd", "ee"), ("ee", "ff")).toDF("u", "v")
+    val loop = Clustering.components(spark, df, driverBudgetBytes = 0L)
+    loop.decision.local shouldBe false
+    loop.decision.rounds should be > 0
+    loop.decision.inputEdges shouldBe 5L // (aa,bb) and (bb,aa) are distinct rows
+    val driver = Clustering.components(spark, df)
+    driver.decision shouldBe loop.decision.copy(local = true, rounds = 0)
+    driver.decision.estBytes should be > 5L * 4
+    // the estimate must be strictly below the budget to finish on the driver
+    val est = driver.decision.estBytes
+    Clustering.components(spark, df, driverBudgetBytes = est).decision.local shouldBe false
+    Clustering.components(spark, df, driverBudgetBytes = est + 1).decision.local shouldBe true
+    driver.assign.as[(String, String)].collect().sorted shouldBe
+      loop.assign.as[(String, String)].collect().sorted
   }
 
   test("clusters() assigns isolated nodes to themselves") {
     val matches = Seq(("a", "b", true), ("c", "d", false))
       .toDF("url_a", "url_b", "is_match")
     val nodes = Seq("a", "b", "c", "d", "e").toDF("url")
-    val m = Clustering.clusters(spark, matches, nodes)
-      .as[(String, String)].collect().toMap
-    m("a") shouldBe "a"
-    m("b") shouldBe "a"
-    m("c") shouldBe "c"
-    m("d") shouldBe "d"
-    m("e") shouldBe "e"
+    regimes.foreach { case (name, budget) =>
+      withClue(s"[$name] ") {
+        val m = Clustering.clusters(spark, matches, nodes, driverBudgetBytes = budget)
+          .as[(String, String)].collect().toMap
+        m shouldBe Map("a" -> "a", "b" -> "a", "c" -> "c", "d" -> "d", "e" -> "e")
+      }
+    }
   }
 }

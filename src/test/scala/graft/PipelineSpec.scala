@@ -81,6 +81,16 @@ class PipelineSpec extends SparkSpec {
     // s0/s1 were committed by the first (pre-crash) run, so they have rows too
     stages should contain allOf ("s0_pages", "s1_mentions")
     metrics.filter(col("rows") < 0).count() shouldBe 0L
+    // how CC finished, with its measured input: a fixture-sized edge set
+    // finishes on the driver, so no loop rounds ran
+    val cc = metrics.filter(col("stage").startsWith("s5_clusters/"))
+      .select("stage", "rows").as[(String, Long)].collect().toMap
+    cc.keySet shouldBe Set("s5_clusters/cc_local", "s5_clusters/cc_input_edges",
+      "s5_clusters/cc_est_bytes", "s5_clusters/cc_rounds")
+    cc("s5_clusters/cc_local") shouldBe 1L
+    cc("s5_clusters/cc_input_edges") should be > 0L
+    cc("s5_clusters/cc_est_bytes") should be > cc("s5_clusters/cc_input_edges")
+    cc("s5_clusters/cc_rounds") shouldBe 0L
   }
 
   test("fit stage commits a model artifact and resume reloads it unchanged") {
