@@ -46,8 +46,9 @@ case class PipelineConfig(
     ccDurableIterations: Boolean = false,
     /** Scoring hydration join strategy: Some(true)/Some(false) force
       * broadcast/shuffle of the mentions projection; None (default) decides
-      * by row count — broadcast while the projection is driver-safe, shuffle
-      * NARROW pair rows beyond that (ops/Scoring.scala hydrate doc). */
+      * by size — broadcast while the projection is driver-safe, shuffle
+      * NARROW pair rows beyond that (`broadcastHydration`; ops/Scoring.scala
+      * hydrate doc). */
     broadcastMentions: Option[Boolean] = None,
     /** When true, insert a model-fit stage between pair generation and
       * scoring: in-engine weak-supervision training (Training.fit) on the
@@ -63,21 +64,19 @@ case class PipelineConfig(
       * capped-out members re-enter the deterministic top-cap, and only the
       * overflow rows can reproduce that. Costs `cappedDropCount` rows of
       * storage, nothing at batch query time. */
-    keepBlockOverflow: Boolean = false,
-    /** Auto-switch threshold for broadcastMentions=None: broadcast the
-      * mentions projection iff its estimated in-memory size — Σ(|surface| +
-      * |ctx| + |url|) + per-row overhead, one cheap scan of the committed s1
-      * checkpoint — is at most this. Sized by BYTES, not rows: the projection
-      * carries ctx strings whose width varies 100x with ctxWindow, and a
-      * row-count gate could sail past Spark's 8 GiB broadcast-table hard
-      * limit (and driver memory) on wide contexts. Default -1 = the driver
-      * byte budget (graft.DriverBudget). */
-    broadcastMentionsMaxBytes: Long = -1L) {
+    keepBlockOverflow: Boolean = false) {
 
-  /** Resolved broadcast cap: explicit non-negative value, or the driver
-    * byte budget. */
-  def resolvedBroadcastMentionsMaxBytes: Long =
-    DriverBudget.orDefault(broadcastMentionsMaxBytes)
+  /** Broadcast cap of the hydration projection: the driver byte budget. */
+  def resolvedBroadcastMentionsMaxBytes: Long = DriverBudget.bytes
+
+  /** Whether scoring broadcasts the mentions projection: `broadcastMentions`
+    * when forced, else iff its estimated size `bytes` (Scoring.mentionsBytes;
+    * evaluated only when not forced) fits the cap. Sized by BYTES, not
+    * rows: the projection carries ctx strings whose width varies 100x with
+    * ctxWindow, and a row-count gate could sail past Spark's 8 GiB
+    * broadcast-table hard limit (and driver memory) on wide contexts. */
+  def broadcastHydration(bytes: => Long): Boolean =
+    broadcastMentions.getOrElse(bytes <= resolvedBroadcastMentionsMaxBytes)
 }
 
 case class PipelineResult(
@@ -192,20 +191,13 @@ object Pipeline {
       Blocking.pairsFromBlocks(blocks, cfg.saltThreshold, cfg.nSalts)
     }
 
-    // byte-based auto: one cheap scan of the committed s1 checkpoint summing
-    // the projection's string payload (+24B/row envelope); lazy so it is paid
-    // only when a consuming stage (fit / scoring) actually recomputes.
-    // octet_length (UTF-8 BYTES, not chars — multi-byte text undercounted
-    // otherwise), each column coalesced to 0 so a null never erases the
-    // row's other columns or its fixed overhead (round-3 advice).
+    // byte-based auto: one cheap scan of the committed s1 checkpoint
+    // (Scoring.mentionsBytes); lazy so it is paid only when a consuming
+    // stage (fit / scoring) actually recomputes
     lazy val bcast = {
       val t0 = System.nanoTime()
-      def oct(c: String) = coalesce(octet_length(col(c)).cast("long"), lit(0L))
-      lazy val bytes = mentions.agg(coalesce(sum(
-        oct("surface") + oct("ctx") + oct("url") + lit(24L)),
-        lit(0L))).head().getLong(0)
-      val choice = cfg.broadcastMentions.getOrElse(
-        bytes <= cfg.resolvedBroadcastMentionsMaxBytes)
+      lazy val bytes = mentions.agg(Scoring.mentionsBytes).head().getLong(0)
+      val choice = cfg.broadcastHydration(bytes)
       // the hydration strategy + its estimated payload is lineage: the
       // broadcast build is the pipeline's one driver-serial term, so every
       // run records which path it took and how big the projection was
@@ -246,14 +238,13 @@ object Pipeline {
 
     var cc: Option[Clustering.Decision] = None
     val clusters = stage(spark, cfg, "s5_clusters", pending) {
-      // CC partitions scale with data on a slow ramp (Partitioning doc):
-      // pages.count() is a metadata-cheap read of the committed s0 parquet
-      val ccParts = Partitioning.ccPartitions(
-        spark.sparkContext.defaultParallelism, pages.count())
+      // CC partitions scale with data on a slow ramp (Partitioning doc);
+      // by-name, so pages.count() runs only if CC takes its loop
       val c = Clustering.clustered(spark, scored,
         pages.filter(col("lang") === "en" && col("invariant_ok")),
         if (cfg.ccDurableIterations) Some(s"${cfg.checkpointDir}/cc") else None,
-        partitions = Some(ccParts))
+        partitions = Some(Partitioning.ccPartitions(
+          spark.sparkContext.defaultParallelism, pages.count())))
       cc = Some(c.decision)
       c.assign
     }

@@ -31,6 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    rows.
   * Both regimes emit the same rows: (node, component minimum) for every
   * non-root node.
+  *
+  * `resolveFlips` is the delta form: it maintains a committed assignment
+  * under edge flips and node changes, for every attach/detach algebra.
   */
 object Clustering {
 
@@ -102,13 +105,15 @@ object Clustering {
     *
     * Loop only: `checkpointDir`, when set, persists each round's cut to
     * parquet (resumable lineage cut; otherwise localCheckpoint);
-    * `partitions` sizes the per-round shuffles; the loop throws on
+    * `partitions` sizes the per-round shuffles (by-name: evaluated only
+    * when the loop runs, so a caller may size it by a Spark job); the loop
+    * throws on
     * non-convergence within maxIter rounds — returning a half-converged edge
     * set as final clusters would be silently wrong downstream.
     */
   def connectedComponents(spark: SparkSession, edges0: DataFrame,
       checkpointDir: Option[String] = None, maxIter: Int = 50,
-      partitions: Option[Int] = None,
+      partitions: => Option[Int] = None,
       driverBudgetBytes: Long = graft.DriverBudget.bytes): DataFrame =
     components(spark, edges0, checkpointDir, maxIter, partitions,
       driverBudgetBytes).assign
@@ -116,7 +121,7 @@ object Clustering {
   /** connectedComponents with the decision that produced it. */
   def components(spark: SparkSession, edges0: DataFrame,
       checkpointDir: Option[String] = None, maxIter: Int = 50,
-      partitions: Option[Int] = None,
+      partitions: => Option[Int] = None,
       driverBudgetBytes: Long = graft.DriverBudget.bytes): Components = {
     // Materialize the INPUT edge set before any CC-scoped conf: the caller's
     // un-materialized upstream (blocking + scoring in entry(), the band
@@ -196,7 +201,7 @@ object Clustering {
     * defaultParallelism tasks. The one-pass stages (scoring) ARE CPU-heavy
     * per byte and need parallelism-first (measured 3x slower at 50k pages
     * under byte-targeted coalescing), hence the scope. */
-  private def withLoopConfs[T](spark: SparkSession, partitions: Option[Int])(
+  private def withLoopConfs[T](spark: SparkSession, partitions: => Option[Int])(
       body: => T): T = {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
@@ -274,7 +279,7 @@ object Clustering {
     * connected nodes, self-cluster for isolated ones. */
   def clusters(spark: SparkSession, matchPairs: DataFrame, nodes: DataFrame,
       checkpointDir: Option[String] = None,
-      partitions: Option[Int] = None,
+      partitions: => Option[Int] = None,
       driverBudgetBytes: Long = graft.DriverBudget.bytes): DataFrame =
     clustered(spark, matchPairs, nodes, checkpointDir, partitions,
       driverBudgetBytes).assign
@@ -282,7 +287,7 @@ object Clustering {
   /** clusters with the CC decision that produced it. */
   def clustered(spark: SparkSession, matchPairs: DataFrame, nodes: DataFrame,
       checkpointDir: Option[String] = None,
-      partitions: Option[Int] = None,
+      partitions: => Option[Int] = None,
       driverBudgetBytes: Long = graft.DriverBudget.bytes): Components = {
     val edges = matchPairs.filter(col("is_match"))
       .select(col("url_a").as("u"), col("url_b").as("v"))
@@ -291,5 +296,63 @@ object Clustering {
     cc.copy(assign = nodes.select(col("url")).distinct()
       .join(cc.assign, Seq("url"), "left")
       .select(col("url"), coalesce(col("cluster_id"), col("url")).as("cluster_id")))
+  }
+
+  /** A maintained assignment and the base labels dissolved to make it. */
+  final case class Resolved(
+      /** (url, cluster_id) for every node of the changed graph. */
+      assign: DataFrame,
+      /** (cluster_id) base labels dissolved and re-solved. */
+      affectedLabels: DataFrame)
+
+  /** The delta form of `clusters`: the assignment `clusters` would give over
+    * the base edges minus `removed` plus `added`, computed from the
+    * committed `baseAssign` without re-solving the whole graph.
+    *
+    * Labels are component minima, so a component no flip and no
+    * `changedNodes` url touches keeps its base label verbatim. Every other
+    * base component is dissolved; its members (`memberUrls`) are re-solved
+    * over their surviving base edges plus the added ones, on the node set
+    * `subNodes(memberUrls)` (the caller adds new nodes and drops deleted
+    * ones there). Components are edge-closed, so a member's base edges
+    * never leave the member set. The ER attach/detach (ops/Incremental)
+    * and the near-dup attach/detach (ops/DeltaDedup) both run this tail.
+    *
+    * Every probe into the base edges/assignment broadcasts its
+    * flip-proportional side. `affectedLabels`, `memberUrls` and the merged
+    * assignment are plan cuts tagged `<tag>_<name>`.
+    *
+    * @param baseEdges  (url_a, url_b) match edges of the base state.
+    * @param baseAssign (url, cluster_id) `clusters` output of the base state.
+    * @param removed    (url_a, url_b) base edges that no longer match.
+    * @param added      (url_a, url_b) new match edges.
+    */
+  def resolveFlips(spark: SparkSession, tag: String, baseEdges: DataFrame,
+      baseAssign: DataFrame, removed: DataFrame, added: DataFrame,
+      changedNodes: Seq[DataFrame],
+      subNodes: DataFrame => DataFrame): Resolved = {
+    val changedUrls = (Seq(removed.select(col("url_a").as("url")),
+        removed.select(col("url_b").as("url")),
+        added.select(col("url_a").as("url")),
+        added.select(col("url_b").as("url"))) ++ changedNodes)
+      .reduce(_ union _).distinct()
+    val affectedLabels = PlanCut(s"${tag}_affectedLabels")(baseAssign
+      .join(broadcast(changedUrls), Seq("url"), "left_semi")
+      .select("cluster_id").distinct())
+    val memberUrls = PlanCut(s"${tag}_memberUrls")(baseAssign
+      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
+      .select("url"))
+    val subEdges = baseEdges.select("url_a", "url_b")
+      .join(broadcast(memberUrls.withColumnRenamed("url", "url_a")),
+        Seq("url_a"), "left_semi")
+      .join(broadcast(removed), Seq("url_a", "url_b"), "left_anti")
+      .unionByName(added)
+      .withColumn("is_match", lit(true))
+    val resolved = clusters(spark, subEdges, subNodes(memberUrls))
+    Resolved(PlanCut(s"${tag}_assign")(baseAssign
+        .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
+        .select("url", "cluster_id")
+        .unionByName(resolved.select("url", "cluster_id"))),
+      affectedLabels)
   }
 }

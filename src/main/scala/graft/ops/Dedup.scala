@@ -250,8 +250,8 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bands: Int = 16, rows: Int = 4,
       maxBucket: Int = 256, seed: Long = 42L): MinhashDedupState = {
-    val keyed = minhashBandTable(docs, idCol, textCol, bands, rows, seed)
-      .localCheckpoint(eager = true)
+    val keyed = PlanCut("mh_keyed")(
+      minhashBandTable(docs, idCol, textCol, bands, rows, seed))
     val base = DeltaDedup.batch(spark, keyed, docs.select(col(idCol).as("id")),
       minhashVerify(docs, idCol, textCol, threshold, deltaSized = false),
       maxBucket)
@@ -288,8 +288,8 @@ object Dedup {
       allDocs: DataFrame, deltaDocs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.8, bands: Int = 16,
       rows: Int = 4, maxBucket: Int = 256, seed: Long = 42L): DedupAttachResult = {
-    val keyedD = minhashBandTable(deltaDocs, idCol, textCol, bands, rows, seed)
-      .localCheckpoint(eager = true)
+    val keyedD = PlanCut("mh_keyedD")(
+      minhashBandTable(deltaDocs, idCol, textCol, bands, rows, seed))
     // the base slice stays the committed index — only the delta is plan-cut;
     // Catalyst pushes the is_delta filters into the union branches, so the
     // core's keyedB/keyedD reads never scan the other side
@@ -321,8 +321,7 @@ object Dedup {
       remainingDocs: DataFrame, deletedIds: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, maxBucket: Int = 256): DedupAttachResult = {
-    val delIds = deletedIds.select(col(idCol).as("id"))
-      .localCheckpoint(eager = true)
+    val delIds = PlanCut("mh_delIds")(deletedIds.select(col(idCol).as("id")))
     val att = DeltaDedup.detach(spark, state.keyed, delIds, state.edges,
       state.assign,
       minhashVerify(remainingDocs, idCol, textCol, threshold, deltaSized = true),

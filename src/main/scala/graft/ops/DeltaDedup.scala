@@ -34,26 +34,14 @@ import org.apache.spark.sql.functions._
   *    every generated pair involves a delta doc → covered by the
   *    delta × co-member expansion (n_old > cap stays over-cap forever).
   * Verification is pair-intrinsic over immutable per-doc sets, so candidate
-  * flips are exactly edge flips, and CC labels are maintained with the same
-  * dissolve/re-solve pattern as the ER attach (ops/Incremental I5).
+  * flips are exactly edge flips, and CC maintenance is Clustering's delta
+  * form (`Clustering.resolveFlips`), the tail the ER attach runs too.
   *
   * Scale shape: every attach/detach shuffle is delta-proportional — base
   * state is read as scans pruned by semi-joins against the touched buckets /
   * affected ids; nothing re-hashes or re-pairs the untouched corpus.
   */
 object DeltaDedup {
-
-  /** Small pool for overlapping independent attach legs (same pattern as
-    * Incremental.attachEc — Spark runs jobs from several threads side by
-    * side, so the added-edge verification overlaps the removed-branch
-    * survivor scans instead of serializing behind them). */
-  private lazy val keepEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-deltadedup-keep")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Edge flips + maintained assignment from one inserts-only attach. */
   final case class Attached(
@@ -123,12 +111,8 @@ object DeltaDedup {
   def batch(spark: SparkSession, keyed: DataFrame, nodes: DataFrame,
       verify: DataFrame => DataFrame, maxBucket: Int,
       keyFn: Column => Column = key): Batch = {
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"ddb_$name", df)
-      df.localCheckpoint(eager = true)
-    }
-    val edges = keep("edges")(verify(cappedPairs(keyed, maxBucket)))
-    val assign = keep("assign")(Clustering.clusters(spark,
+    val edges = PlanCut("ddb_edges")(verify(cappedPairs(keyed, maxBucket)))
+    val assign = PlanCut("ddb_assign")(Clustering.clusters(spark,
       urlEdges(edges, keyFn).withColumn("is_match", lit(true)),
       nodes.select(keyFn(col("id")).as("url"))))
     Batch(edges, assign)
@@ -156,19 +140,6 @@ object DeltaDedup {
   def attach(spark: SparkSession, keyedAll: DataFrame, baseEdges: DataFrame,
       baseAssign: DataFrame, verify: DataFrame => DataFrame,
       maxBucket: Int, keyFn: Column => Column = key): Attached = {
-    // eager plan-cut leaves, not persist(): each keep() below roots several
-    // downstream self-referencing branches, and without a LOGICAL-plan cut
-    // the diff algebra's analyzed plan grows exponentially (persist() caches
-    // data but keeps the full plan — measured on the ER twin: analysis time
-    // doubling per stage and a driver analyzer OOM at 800 fixture pages)
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"dd_$name", df)
-      df.localCheckpoint(eager = true)
-    }
-    def keepF(name: String)(df: DataFrame) =
-      scala.concurrent.Future(keep(name)(df))(keepEc)
-    def await(f: scala.concurrent.Future[DataFrame]): DataFrame =
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
     val keyedB = keyedAll.filter(!col("is_delta"))
     val keyedD = keyedAll.filter(col("is_delta"))
 
@@ -181,15 +152,16 @@ object DeltaDedup {
     // index. Probe sets are bounded by ~bands x |delta| rows (plus the
     // rare cap-crossing neighborhoods); a delta so large that its bucket
     // set exceeds the broadcast cap should re-dedup the corpus instead.
-    val touched = keep("touched")(keyedD.select("bucket").distinct())
+    val touched = PlanCut("dd_touched")(keyedD.select("bucket").distinct())
 
     // touched-bucket membership under old and new views. n_old is DERIVED
     // (n_new minus the bucket's delta rows — exact under inserts-only, a
     // band table holds one row per (id, band)) instead of aggregating a
     // second scan of the base index.
     val oldT = keyedB.join(broadcast(touched), Seq("bucket"), "left_semi")
-    val newT = keep("newT")(oldT.unionByName(keyedD))
-    val sizes = keep("sizes")(newT.groupBy("bucket").agg(count(lit(1)).as("n_new"))
+    val newT = PlanCut("dd_newT")(oldT.unionByName(keyedD))
+    val sizes = PlanCut("dd_sizes")(newT
+      .groupBy("bucket").agg(count(lit(1)).as("n_new"))
       .join(keyedD.groupBy("bucket").agg(count(lit(1)).as("n_d")),
         Seq("bucket"), "left")
       .select(col("bucket"),
@@ -202,7 +174,7 @@ object DeltaDedup {
     val newTElig = newT.join(broadcast(eligNew), Seq("bucket"), "left_semi")
     // materializes concurrently with the removed-candidate branch below
     // (both depend only on the kept newT/sizes)
-    val addedCandF = keepF("addedCand")(newTElig.filter(col("is_delta"))
+    val addedCandF = PlanCut.async("dd_addedCand")(newTElig.filter(col("is_delta"))
       .select(col("bucket"), col("id").as("id_d"))
       .join(newTElig.select(col("bucket"), col("id").as("id_o")), Seq("bucket"))
       .filter(col("id_d") =!= col("id_o"))
@@ -218,20 +190,21 @@ object DeltaDedup {
       col("n_new") > maxBucket).select("bucket")
     val crossedMembers = newT.join(broadcast(crossed), Seq("bucket"), "left_semi")
       .filter(!col("is_delta"))
-    val removedCand0 = keep("removedCand0")(crossedMembers.as("a").join(crossedMembers.as("b"),
+    val removedCand0 = PlanCut("dd_removedCand0")(crossedMembers.as("a")
+      .join(crossedMembers.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct())
-    val removedIds = keep("removedIds")(removedCand0.select(col("id_a").as("id"))
+    val removedIds = PlanCut("dd_removedIds")(removedCand0.select(col("id_a").as("id"))
       .union(removedCand0.select(col("id_b").as("id"))).distinct())
     // the added-edge verification (shingle hydration + pair kernels) is the
     // expensive leg — overlap it with the removed-branch survivor scans
-    val addedCand = await(addedCandF)
-    val addedLF = keepF("addedL")(verify(addedCand)
+    val addedCand = PlanCut.await(addedCandF)
+    val addedLF = PlanCut.async("dd_addedL")(verify(addedCand)
       .join(broadcast(baseEdges.join(
         broadcast(addedCand.select("id_a").distinct()),
         Seq("id_a"), "left_semi")), Seq("id_a", "id_b"), "left_anti"))
-    val untouchedOfRemoved = keep("untouchedOfRemoved")(keyedB
+    val untouchedOfRemoved = PlanCut("dd_untouchedOfRemoved")(keyedB
       .join(broadcast(removedIds), Seq("id"), "left_semi")
       .join(broadcast(touched), Seq("bucket"), "left_anti"))
     val untouchedEligSizes = keyedB
@@ -256,15 +229,17 @@ object DeltaDedup {
     // anti-join's base side is pre-pruned to the delta ids' edges (an
     // anti-join result only depends on right rows whose keys appear on the
     // left), so the base edge table is never shuffled either.
-    val removedL = keep("removedL")(baseEdges.join(broadcast(trueRemoved),
+    val removedL = PlanCut("dd_removedL")(baseEdges.join(broadcast(trueRemoved),
       Seq("id_a", "id_b"), "left_semi"))
-    val addedL = await(addedLF)
+    val addedL = PlanCut.await(addedLF)
     // dissolve components an edge flip touches; re-solve with delta nodes;
-    // everything else keeps its base label (same pattern as the ER attach)
-    resolveFlips(spark, keep, baseEdges, baseAssign, removedL, addedL, keyFn,
+    // everything else keeps its base label
+    val cc = Clustering.resolveFlips(spark, "dd", urlEdges(baseEdges, keyFn),
+      baseAssign, urlEdges(removedL, keyFn), urlEdges(addedL, keyFn),
       changedNodes = Nil,
       subNodes = _.union(keyedD.select(keyFn(col("id")).as("url")).distinct())
         .distinct())
+    Attached(cc.assign, removedL, addedL)
   }
 
   /** Detach a delete batch from a committed dedup state: produce the cluster
@@ -295,21 +270,18 @@ object DeltaDedup {
       baseEdges: DataFrame, baseAssign: DataFrame,
       verify: DataFrame => DataFrame, maxBucket: Int,
       keyFn: Column => Column = key): Attached = {
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"ddx_$name", df)
-      df.localCheckpoint(eager = true)
-    }
-    val delIds = keep("delIds")(deletedIds.select("id"))
+    val delIds = PlanCut("ddx_delIds")(deletedIds.select("id"))
 
     // touched buckets + membership before and after the delete. Probe sets
     // broadcast, deleted-member counts derived from the (kept, delete-
     // proportional) deleted membership — the base index is read once as a
     // streaming scan, never shuffled (same rationale as attach).
-    val delMembers = keep("delMembers")(baseKeyed.join(broadcast(delIds), Seq("id"), "left_semi"))
-    val touched = keep("touched")(delMembers.select("bucket").distinct())
+    val delMembers = PlanCut("ddx_delMembers")(
+      baseKeyed.join(broadcast(delIds), Seq("id"), "left_semi"))
+    val touched = PlanCut("ddx_touched")(delMembers.select("bucket").distinct())
     val oldT = baseKeyed.join(broadcast(touched), Seq("bucket"), "left_semi")
-    val newT = keep("newT")(oldT.join(broadcast(delIds), Seq("id"), "left_anti"))
-    val sizes = keep("sizes")(touched
+    val newT = PlanCut("ddx_newT")(oldT.join(broadcast(delIds), Seq("id"), "left_anti"))
+    val sizes = PlanCut("ddx_sizes")(touched
       .join(broadcast(newT.groupBy("bucket").agg(count(lit(1)).as("n_new"))),
         Seq("bucket"), "left_outer")
       .select(col("bucket"), coalesce(col("n_new"), lit(0L)).as("n_new"))
@@ -321,7 +293,7 @@ object DeltaDedup {
 
     // removed edges: incident to a deleted id (see scaladoc for why this is
     // the COMPLETE removal set under deletes)
-    val removedL = keep("removedL")(baseEdges
+    val removedL = PlanCut("ddx_removedL")(baseEdges
       .join(broadcast(delIds.withColumnRenamed("id", "id_a")),
         Seq("id_a"), "left_semi")
       .unionByName(baseEdges
@@ -335,11 +307,12 @@ object DeltaDedup {
     val reentered = sizes.filter(col("n_old") > maxBucket &&
       col("n_new") > 1 && col("n_new") <= maxBucket).select("bucket")
     val reMembers = newT.join(broadcast(reentered), Seq("bucket"), "left_semi")
-    val addedCand = keep("addedCand")(reMembers.as("a").join(reMembers.as("b"),
+    val addedCand = PlanCut("ddx_addedCand")(reMembers.as("a")
+      .join(reMembers.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct())
-    val addedL = keep("addedL")(verify(addedCand)
+    val addedL = PlanCut("ddx_addedL")(verify(addedCand)
       .join(broadcast(baseEdges.join(
         broadcast(addedCand.select("id_a").distinct()),
         Seq("id_a"), "left_semi")), Seq("id_a", "id_b"), "left_anti"))
@@ -347,46 +320,10 @@ object DeltaDedup {
     // dissolve components touched by an edge flip or holding a deleted node;
     // re-solve without the deleted nodes; keep every other label verbatim
     val delUrls = delIds.select(keyFn(col("id")).as("url"))
-    resolveFlips(spark, keep, baseEdges, baseAssign, removedL, addedL, keyFn,
+    val cc = Clustering.resolveFlips(spark, "ddx", urlEdges(baseEdges, keyFn),
+      baseAssign, urlEdges(removedL, keyFn), urlEdges(addedL, keyFn),
       changedNodes = Seq(delUrls),
       subNodes = _.join(broadcast(delUrls), Seq("url"), "left_anti"))
-  }
-
-  /** The CC tail of attach and detach: dissolve every base component that an
-    * edge flip or a `changedNodes` url touches, re-solve those components
-    * over their surviving base edges plus the added ones on the node set
-    * `subNodes(memberUrls)`, and keep every other base label verbatim.
-    * Every probe into the base edges/assignment broadcasts its flip-
-    * proportional side. */
-  private def resolveFlips(spark: SparkSession,
-      keep: String => DataFrame => DataFrame, baseEdges: DataFrame,
-      baseAssign: DataFrame, removedL: DataFrame, addedL: DataFrame,
-      keyFn: Column => Column, changedNodes: Seq[DataFrame],
-      subNodes: DataFrame => DataFrame): Attached = {
-    val removedK = urlEdges(removedL, keyFn)
-    val addedK = urlEdges(addedL, keyFn)
-    val changedUrls = (Seq(removedK.select(col("url_a").as("url")),
-        removedK.select(col("url_b").as("url")),
-        addedK.select(col("url_a").as("url")),
-        addedK.select(col("url_b").as("url"))) ++ changedNodes)
-      .reduce(_ union _).distinct()
-    val affectedLabels = keep("affectedLabels")(baseAssign
-      .join(broadcast(changedUrls), Seq("url"), "left_semi")
-      .select("cluster_id").distinct())
-    val memberUrls = keep("memberUrls")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url"))
-    val subEdges = urlEdges(baseEdges, keyFn)
-      .join(broadcast(memberUrls.withColumnRenamed("url", "url_a")),
-        Seq("url_a"), "left_semi")
-      .join(broadcast(removedK), Seq("url_a", "url_b"), "left_anti")
-      .unionByName(addedK)
-      .withColumn("is_match", lit(true))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes(memberUrls))
-    val assign = keep("assign")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id")))
-    Attached(assign, removedL, addedL)
+    Attached(cc.assign, removedL, addedL)
   }
 }

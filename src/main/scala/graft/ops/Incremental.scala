@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -43,7 +41,9 @@ import graft.PipelineConfig
   *  - CC labels are component minima, so unaffected components keep their
   *    labels verbatim and only components touched by an added/removed edge
   *    (plus dirty nodes) are re-solved, over a subgraph that provably
-  *    contains every final edge incident to it.
+  *    contains every final edge incident to it — CC maintenance is
+  *    Clustering's delta form (`Clustering.resolveFlips`), the tail the
+  *    near-dup attach/detach (ops/DeltaDedup) runs too.
   *
   * Scale shape: every shuffle is delta-proportional. Base state is read as
   * scans with broadcast semi-join pruning (touched keys against s2/s2_overflow,
@@ -58,20 +58,6 @@ import graft.PipelineConfig
   * maintenance over the checkpointed stage tables.
   */
 object Incremental {
-
-  /** Small pool for concurrently materializing INDEPENDENT attach
-    * intermediates: Spark's scheduler runs jobs submitted from several
-    * threads side by side (FIFO back-fill), so two plan-cut legs that do not
-    * consume each other overlap instead of serializing — the attach barrier
-    * floor is ~20 eager jobs, and at bench scale each carries 0.2-0.9s of
-    * fixed coordination cost (optimization guide §2.6). */
-  private lazy val attachEc: ExecutionContext =
-    ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
-        val t = new Thread(r, "graft-attach-keep")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Committed base state: the stage tables a full `Pipeline.run` wrote.
     * `blockOverflow` is the rank>cap remainder of hot blocks (stage
@@ -127,62 +113,33 @@ object Incremental {
       /** (url_a, url_b, was_match, now_match) pairs whose decision flipped. */
       changedEdges: DataFrame,
       /** (cluster_id) base labels dissolved and re-solved this attach. */
-      affectedLabels: DataFrame,
-      /** Intermediates are eager local checkpoints (plan-cut leaves); their
-        * blocks are reclaimed by the ContextCleaner when the AttachResult
-        * goes out of scope, so release is a no-op kept for API stability. */
-      release: () => Unit = () => ())
+      affectedLabels: DataFrame)
 
   /** Incrementally resolve `deltaPagesIn` (raw page rows, same schema as the
     * batch input) against `base`. `cfg` must carry the SAME blocking/scoring
     * parameters as the base run — the equality guarantee is per-config. */
   def attach(spark: SparkSession, base: BaseState, deltaPagesIn: DataFrame,
-      dict: DataFrame, cfg: PipelineConfig,
-      /** Print wall + row count per materialized intermediate (dev/ops
-        * decomposition — tools/IncrAB passes true). */
-      verbose: Boolean = false): AttachResult = {
+      dict: DataFrame, cfg: PipelineConfig): AttachResult = {
     require(base.blockOverflow.isDefined,
       "attach requires a base built with keepBlockOverflow=true: exact cap " +
         "re-entry on shrinking hot blocks needs the s2_overflow rows " +
         "(without them the result would silently diverge from a full re-run)")
-    // Eager local checkpoints, NOT persist(): each keep() cuts the LOGICAL
-    // plan to a leaf, not just the execution lineage. The attach algebra
-    // references its intermediates multiply (old-vs-new memberships, UxU
-    // diffs, subgraph assembly), so with persist() the analyzed plan grows
-    // exponentially with stage depth — measured on the portable twin:
-    // analysis time doubling per stage, then a driver analyzer OOM at 800
-    // fixture pages. Base tables stay lazy parquet scans (leaf plans); only
-    // delta-proportional intermediates are materialized. Checkpoint blocks
-    // are reclaimed by the ContextCleaner once the frames go out of scope.
-    // Independent legs materialize CONCURRENTLY (keepF + await): under
-    // verbose the printed walls of concurrent legs overlap.
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"er_$name", df)
-      if (!verbose) df.localCheckpoint(eager = true)
-      else {
-        val t0 = System.nanoTime()
-        val out = df.localCheckpoint(eager = true)
-        println(f"[attach] $name%-20s ${(System.nanoTime() - t0) / 1e9}%7.2f s " +
-          f"rows=${out.count()}")
-        out
-      }
-    }
-    def keepF(name: String)(df: DataFrame): Future[DataFrame] =
-      Future(keep(name)(df))(attachEc)
-    def await(f: Future[DataFrame]): DataFrame = Await.result(f, Duration.Inf)
+    // Delta-proportional intermediates are eager plan cuts (ops/PlanCut);
+    // base tables stay lazy parquet scans (leaf plans). Independent legs
+    // materialize concurrently (PlanCut.async + PlanCut.await).
 
     // ---- s0: merged snapshot winners for urls the delta mentions ----------
     // deltaUrls and the merged-winner window are independent given the raw
     // delta (both derive the url set inline) — one overlapped barrier
     val deltaCanon = Extract.canonicalized(deltaPagesIn)
-    val deltaUrlsF = keepF("deltaUrls")(deltaCanon.select("url").distinct())
-    val mergedTouchedPagesF = keepF("mergedTouchedPages")(
+    val deltaUrlsF = PlanCut.async("er_deltaUrls")(deltaCanon.select("url").distinct())
+    val mergedTouchedPagesF = PlanCut.async("er_mergedTouchedPages")(
       Extract.withInvariant(Extract.latestSnapshot(
         base.pages.drop("invariant_ok")
           .join(broadcast(deltaCanon.select("url").distinct()), Seq("url"), "left_semi")
           .unionByName(deltaCanon))))
-    val deltaUrls = await(deltaUrlsF)
-    val mergedTouchedPages = await(mergedTouchedPagesF)
+    val deltaUrls = PlanCut.await(deltaUrlsF)
+    val mergedTouchedPages = PlanCut.await(mergedTouchedPagesF)
 
     // dirty = new url, or an existing url whose winning snapshot changed
     // (html hash is the identity that matters: extraction, mentions and
@@ -195,7 +152,7 @@ object Incremental {
       .join(broadcast(baseWinner), Seq("url"), "left_outer")
       .filter(col("h0").isNull || col("h0") =!= col("h1"))
       .select("url")
-      .pipe(keep("dirtyUrls"))
+      .pipe(PlanCut("er_dirtyUrls"))
 
     // ---- s1: mentions of dirty urls, old and new --------------------------
     val dirtyPages = mergedTouchedPages.join(broadcast(dirtyUrls), Seq("url"), "left_semi")
@@ -207,15 +164,17 @@ object Incremental {
     // other block's membership can differ from the base run's. The OLD-side
     // key set (a scan of base mentions) materializes concurrently with the
     // new-side extract -> block chain.
-    val oldDirtyKeysF = keepF("oldDirtyKeys")(
+    val oldDirtyKeysF = PlanCut.async("er_oldDirtyKeys")(
       Blocking.allBlocks(oldDirtyMentions, dict, cfg.seed)
         .select("block_key").distinct())
-    val newDirtyMentions = keep("newDirtyMentions")(Extract.mentions(dirtyPages, cfg.ctxWindow))
-    val newDirtyBlocks = keep("newDirtyBlocks")(Blocking.allBlocks(newDirtyMentions, dict, cfg.seed))
+    val newDirtyMentions = PlanCut("er_newDirtyMentions")(
+      Extract.mentions(dirtyPages, cfg.ctxWindow))
+    val newDirtyBlocks = PlanCut("er_newDirtyBlocks")(
+      Blocking.allBlocks(newDirtyMentions, dict, cfg.seed))
     val touchedKeys = newDirtyBlocks.select("block_key")
-      .union(await(oldDirtyKeysF))
+      .union(PlanCut.await(oldDirtyKeysF))
       .distinct()
-      .pipe(keep("touchedKeys"))
+      .pipe(PlanCut("er_touchedKeys"))
 
     // raw (uncapped) base membership of touched blocks: capped rows plus the
     // committed overflow, so cap re-entry on shrinking blocks is exact
@@ -227,20 +186,20 @@ object Incremental {
     // new mentions; the content-hash rank cap then reproduces the batch cap.
     // The old-membership scan (oldTouchedBlocks) is independent of the
     // merge+recap chain — overlapped.
-    val oldTouchedBlocksF = keepF("oldTouchedBlocks")(base.blocks
+    val oldTouchedBlocksF = PlanCut.async("er_oldTouchedBlocks")(base.blocks
       .join(broadcast(touchedKeys), Seq("block_key"), "left_semi")
       .select(col("block_key"), col("mention_id"), col("url"),
         xxhash64(col("block_key")).as("block_id")))
     val mergedRawTouched = baseRawTouched
       .join(broadcast(dirtyUrls), Seq("url"), "left_anti")
       .unionByName(newDirtyBlocks.select("block_key", "mention_id", "url"))
-      .pipe(keep("mergedRawTouched"))
-    val newTouchedBlocks = keep("newTouchedBlocks")(Blocking.capBlocks(mergedRawTouched, cfg.maxBlock)
-      .withColumn("block_id", xxhash64(col("block_key"))))
+      .pipe(PlanCut("er_mergedRawTouched"))
+    val newTouchedBlocks = PlanCut("er_newTouchedBlocks")(
+      Blocking.capBlocks(mergedRawTouched, cfg.maxBlock).withColumn("block_id", xxhash64(col("block_key"))))
     // materialized once: consumed by the leaver/entrant diff, the co-member
     // expansion and the old-contribution join — without the checkpoint each
     // consumer re-scans the full s2_blocks table
-    val oldTouchedBlocks = await(oldTouchedBlocksF)
+    val oldTouchedBlocks = PlanCut.await(oldTouchedBlocksF)
 
     // ---- s3: mention pairs whose candidate set can have changed -----------
     // NEVER regenerate a touched block's full O(n²) pair set (one dirty
@@ -283,7 +242,7 @@ object Incremental {
     // no distinct here: mpRaw dedups its own output, and duplicate membership
     // rows (present in both caps) cannot change the pair set — saves a shuffle
     val coMembers = oldCapM.unionByName(newCapM)
-    val mpRaw = keep("mpRaw")(broadcast(dMembers
+    val mpRaw = PlanCut("er_mpRaw")(broadcast(dMembers
       .select(col("block_id"), col("mention_id").as("mid_d"),
         col("url").as("url_d")))
       .join(coMembers.select(col("block_id"), col("mention_id").as("mid_o"),
@@ -310,7 +269,7 @@ object Incremental {
     // carry and the batch self-join pairs on.
     val midsChanged = mpKeys.select(col("mid_a").as("mention_id"))
       .union(mpKeys.select(col("mid_b").as("mention_id"))).distinct()
-    val blocksOfChangedF = keepF("blocksOfChanged")(base.blocks
+    val blocksOfChangedF = PlanCut.async("er_blocksOfChanged")(base.blocks
       .join(broadcast(midsChanged), Seq("mention_id"), "left_semi")
       .join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
       .select(col("mention_id"), xxhash64(col("block_key")).as("block_id")))
@@ -337,8 +296,8 @@ object Incremental {
         .groupBy("mid_a", "mid_b")
         .agg(min(when(col("src") === 0, col("block_id"))).as("tb_old"),
           min(when(col("src") === 1, col("block_id"))).as("tb_new"))
-    }.pipe(keep("tbON"))
-    val blocksOfChanged = await(blocksOfChangedF)
+    }.pipe(PlanCut("er_tbON"))
+    val blocksOfChanged = PlanCut.await(blocksOfChangedF)
     val tbUnt = coGen(blocksOfChanged, "tb_unt")
 
     // TRULY changed pairs: touched contribution differs (generation gained/
@@ -350,7 +309,7 @@ object Incremental {
       .join(broadcast(dirtyUrls.withColumnRenamed("url", "url_a")), Seq("url_a"), "left_semi")
       .unionByName(mpRaw.join(broadcast(dirtyUrls.withColumnRenamed("url", "url_b")),
         Seq("url_b"), "left_semi"))
-    val mpP = keep("mpP")(mpRaw
+    val mpP = PlanCut("er_mpP")(mpRaw
       .join(broadcast(tbON), Seq("mid_a", "mid_b"), "left")
       .filter(!(col("tb_old") <=> col("tb_new")))
       .select("mid_a", "mid_b", "url_a", "url_b")
@@ -361,14 +320,14 @@ object Incremental {
     // candidate set): one changed mention-level candidate rescores the pair
     // pairsP and affectedUrls both derive from the kept mpP — one
     // overlapped barrier instead of two serial ones
-    val pairsPF = keepF("pairsP")(mpP.select("url_a", "url_b").distinct())
-    val affectedUrlsF = keepF("affectedUrls")(
+    val pairsPF = PlanCut.async("er_pairsP")(mpP.select("url_a", "url_b").distinct())
+    val affectedUrlsF = PlanCut.async("er_affectedUrls")(
       mpP.select(col("url_a").as("url"))
         .union(mpP.select(col("url_b").as("url")))
         .union(dirtyUrls.select("url"))
         .distinct())
-    val pairsP = await(pairsPF)
-    val affectedUrls = await(affectedUrlsF)
+    val pairsP = PlanCut.await(pairsPF)
+    val affectedUrls = PlanCut.await(affectedUrlsF)
 
     // base mention ids of affected urls (the pruning key into s3) and the
     // merged mentions view (the s4 hydration payload) are independent given
@@ -377,15 +336,13 @@ object Incremental {
     // observe() metric — no extra estimation job (same trick as CC's
     // convergence checksums)
     val mentionsUObs = org.apache.spark.sql.Observation()
-    def oct(c: String) = coalesce(octet_length(col(c)).cast("long"), lit(0L))
-    val mentionsUF = keepF("mentionsU")(base.mentions
+    val mentionsUF = PlanCut.async("er_mentionsU")(base.mentions
       .join(broadcast(dirtyUrls), Seq("url"), "left_anti")
       .join(broadcast(affectedUrls), Seq("url"), "left_semi")
       .unionByName(newDirtyMentions)
-      .observe(mentionsUObs, coalesce(sum(
-        oct("surface") + oct("ctx") + oct("url") + lit(24L)),
-        lit(0L)).as("bytes")))
-    val midsU = keep("midsU")(base.mentions.join(broadcast(affectedUrls), Seq("url"), "left_semi")
+      .observe(mentionsUObs, Scoring.mentionsBytes.as("bytes")))
+    val midsU = PlanCut("er_midsU")(base.mentions
+      .join(broadcast(affectedUrls), Seq("url"), "left_semi")
       .select(col("mention_id"), col("url")))
     // committed candidates of P's url pairs, with their committed min
     // generating block id
@@ -396,7 +353,7 @@ object Incremental {
         Seq("mid_b"))
       .join(broadcast(pairsP), Seq("url_a", "url_b"), "left_semi")
       .select("mid_a", "mid_b", "block_id")
-      .pipe(keep("s3P"))
+      .pipe(PlanCut("er_s3P"))
 
     // STABLE mention pairs of P's url pairs — not in the changed set, so
     // their generation AND min block id are bit-identical to the committed
@@ -422,19 +379,17 @@ object Incremental {
     // ---- s4: rescore the P pairs over their full candidate sets -----------
     // merged mentions view restricted to P's urls (hydration payload is
     // delta-proportional)
-    val mentionsU = await(mentionsUF)
+    val mentionsU = PlanCut.await(mentionsUF)
     // hydration strategy: same byte-sized auto-gate as the batch path
     // (round-5 advice — the old unconditional broadcast could exceed the
     // 8 GiB broadcast cap on a dense P set where the batch run would have
     // chosen shuffle hydration); the estimate was observed during the
     // mentionsU materialization above
-    val bcastHydrate = cfg.broadcastMentions.getOrElse {
-      val bytes = mentionsUObs.get("bytes").asInstanceOf[Long]
-      bytes <= cfg.resolvedBroadcastMentionsMaxBytes
-    }
+    val bcastHydrate = cfg.broadcastHydration(
+      mentionsUObs.get("bytes").asInstanceOf[Long])
     val rescored = Scoring.score(newCandsP, mentionsU, cfg.weights,
       cfg.embedDim, cfg.seed, broadcastMentions = bcastHydrate)
-      .pipe(keep("rescored"))
+      .pipe(PlanCut("er_rescored"))
 
     // merged scored view: base rows for url pairs outside P are reused
     // verbatim (their candidate sets and payloads cannot have changed)
@@ -453,49 +408,23 @@ object Incremental {
       .withColumn("was_match", coalesce(col("was_match"), lit(false)))
       .withColumn("now_match", coalesce(col("now_match"), lit(false)))
       .filter(col("was_match") =!= col("now_match"))
-      .pipe(keep("changedEdges"))
+      .pipe(PlanCut("er_changedEdges"))
 
-    // labels to dissolve: components an added/removed edge touches, plus the
-    // labels of every dirty url (a dirty url's validity or membership can
-    // change even with no edge flips)
-    val changedUrls = changedEdges.select(col("url_a").as("url"))
-      .union(changedEdges.select(col("url_b").as("url")))
-      .union(dirtyUrls.select("url"))
-      .distinct()
-    val affectedLabels = base.clusters
-      .join(broadcast(changedUrls), Seq("url"), "left_semi")
-      .select(col("cluster_id")).distinct()
-      .pipe(keep("affectedLabels"))
-
-    // re-solve subgraph: all members of dissolved labels plus dirty urls that
-    // are valid nodes under their merged winner; edges = base edges among
-    // members (components are edge-closed, so a member edge cannot leave the
-    // member set) minus removed flips plus added flips
-    val memberUrls = base.clusters
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url")
+    // dissolve the components a flip or a dirty url touches (a dirty url's
+    // validity or membership can change even with no edge flips); re-solve
+    // them on their members minus the dirty urls, plus the dirty urls that
+    // are valid nodes under their merged winner
     val dirtyValidNodes = mergedTouchedPages
       .join(broadcast(dirtyUrls), Seq("url"), "left_semi")
       .filter(col("lang") === "en" && col("invariant_ok"))
       .select("url")
-    val subNodes = memberUrls.join(broadcast(dirtyUrls), Seq("url"), "left_anti")
-      .union(dirtyValidNodes).distinct()
-    val memberEdges = base.scored.filter(col("is_match"))
-      .join(memberUrls.withColumnRenamed("url", "url_a"), Seq("url_a"), "left_semi")
-      .select("url_a", "url_b")
-    val removed = changedEdges.filter(col("was_match")).select("url_a", "url_b")
-    val added = changedEdges.filter(col("now_match")).select("url_a", "url_b")
-    val subEdges = memberEdges
-      .join(removed, Seq("url_a", "url_b"), "left_anti")
-      .unionByName(added)
-      .withColumn("is_match", lit(true))
-
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-
-    val clustersMerged = base.clusters
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id"))
+    val cc = Clustering.resolveFlips(spark, "er",
+      base.scored.filter(col("is_match")), base.clusters,
+      removed = changedEdges.filter(col("was_match")).select("url_a", "url_b"),
+      added = changedEdges.filter(col("now_match")).select("url_a", "url_b"),
+      changedNodes = Seq(dirtyUrls),
+      subNodes = _.join(broadcast(dirtyUrls), Seq("url"), "left_anti")
+        .union(dirtyValidNodes).distinct())
 
     // merged s0/s1 views for chaining (caller may checkpoint as a new base).
     // pages swaps in the recomputed winner for EVERY delta url (not just
@@ -525,9 +454,9 @@ object Incremental {
       .join(broadcast(mpPKeys), Seq("mid_a", "mid_b"), "left_anti")
       .unionByName(changedCands)
 
-    AttachResult(clustersMerged, scoredMerged, mentionsMerged, pagesMerged,
+    AttachResult(cc.assign, scoredMerged, mentionsMerged, pagesMerged,
       blocksMerged, overflowMerged, pairsMerged,
-      dirtyUrls, touchedKeys, rescored, changedEdges, affectedLabels)
+      dirtyUrls, touchedKeys, rescored, changedEdges, cc.affectedLabels)
   }
 
   /** Incrementally DELETE urls from a committed base (takedown / right-to-
@@ -548,15 +477,14 @@ object Incremental {
     * `deletedUrls` is one `url` column of CANONICAL urls (as committed in
     * the base state); urls absent from the base are no-ops. */
   def detach(spark: SparkSession, base: BaseState, deletedUrls: DataFrame,
-      dict: DataFrame, cfg: PipelineConfig,
-      verbose: Boolean = false): AttachResult = {
+      dict: DataFrame, cfg: PipelineConfig): AttachResult = {
     val tombstones = deletedUrls.select(
       col("url"),
       lit(java.sql.Timestamp.valueOf("9999-01-01 00:00:00")).as("warc_ts"),
       lit(Array.emptyByteArray).as("html"),
       lit("").as("text"),
       lit("xx").as("lang"))
-    val res = attach(spark, base, tombstones, dict, cfg, verbose)
+    val res = attach(spark, base, tombstones, dict, cfg)
     res.copy(
       pages = res.pages.join(deletedUrls.select("url"), Seq("url"), "left_anti"))
   }

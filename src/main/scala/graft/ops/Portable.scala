@@ -76,11 +76,10 @@ object Portable {
     // eager plan-cut leaves: the md5 minhash signature over every element
     // is the twin's dominant cost, and the set table is read by the band
     // explode and by every verification
-    val sets = docs.select(col(idCol).as("id"), setCol.as("v"))
-      .localCheckpoint(eager = true)
-    val keyed = sets.select(col("id"),
+    val sets = PlanCut("md5_sets")(docs.select(col(idCol).as("id"), setCol.as("v")))
+    val keyed = PlanCut("md5_keyed")(sets.select(col("id"),
       explode(bandBuckets(md5MinhashSig(col("v"), numHashes), bands, rows))
-        .as("bucket")).localCheckpoint(eager = true)
+        .as("bucket")))
     (keyed, DeltaDedup.verifyBy(sets, setJaccard(_, _) >= threshold))
   }
 
@@ -220,7 +219,16 @@ object Portable {
   /** Node-level output of the portable ER twin: (url, cluster_id) for every
     * non-representative member (the cluster_id is the component's min url) —
     * erClustersPortable aggregates this to sizes; PortableErSpec checks its
-    * purity against the planted entity truth. */
+    * purity against the planted entity truth.
+    *
+    * Its token-overlap scorer is why the DuckDB oracle cannot see the
+    * production scorer's acronym-only merges (ROADMAP item 1): a page that
+    * uses entity 2i's abbreviation for entity 2i+1 (Synth's shared-
+    * abbreviation trap) clears `Scoring.MinAcronymJw` against entity 2i's
+    * long forms on the acronym alone, while here the pair must share
+    * `minShared` page tokens, which the two entities' topic words do not
+    * give. So the twin, and the g01/g15/g18 SQL that replays it, never
+    * forms those false edges. */
   def erComponentsPortable(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
     val ok = portableOk(pages)
@@ -287,9 +295,8 @@ object Portable {
     * token-overlap verifier. */
   private def erKernel(ok: DataFrame, dict: DataFrame,
       minShared: Int): (DataFrame, DataFrame => DataFrame) = {
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-    (keep(portableBuckets(portableMen(ok), dict)),
-      portableVerify(keep(portableToks(ok)), minShared))
+    (PlanCut("ert_blocks")(portableBuckets(portableMen(ok), dict)),
+      portableVerify(PlanCut("ert_toks")(portableToks(ok)), minShared))
   }
 
   /** DELETE form of the portable ER twin (cross-engine proof row g18 — the
@@ -303,14 +310,14 @@ object Portable {
     * corpus. Output shape matches g01 (cluster_id, cluster_size). */
   def erClustersPortableDetach(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    val ok = portableOk(pages).localCheckpoint(eager = true)
+    val ok = PlanCut("ert_ok")(portableOk(pages))
     val (blk, verify) = erKernel(ok, dict, minShared)
     val urls = ok.select(col("url").as("id"))
     val base = DeltaDedup.batch(spark, blk, urls, verify, maxBlock,
       keyFn = identity)
-    clusterSizes(DeltaDedup.detach(spark, blk, urls.filter(md5Slice(col("id"))),
-      base.edges, base.assign, verify, maxBlock, keyFn = identity).assign)
-      .localCheckpoint(eager = true)
+    PlanCut("ert_sizes")(clusterSizes(DeltaDedup.detach(spark, blk,
+      urls.filter(md5Slice(col("id"))), base.edges, base.assign, verify,
+      maxBlock, keyFn = identity).assign))
   }
 
   /** INCREMENTAL form of the portable ER twin (the cross-engine proof row
@@ -335,15 +342,14 @@ object Portable {
     * pipeline (ops/Incremental). */
   def erClustersPortableIncremental(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    val ok = portableOk(pages).localCheckpoint(eager = true)
+    val ok = PlanCut("ert_ok")(portableOk(pages))
     val (blk, verify) = erKernel(ok, dict, minShared)
     val blkAll = blk.withColumn("is_delta", md5Slice(col("id")))
     val base = DeltaDedup.batch(spark, blkAll.filter(!col("is_delta")),
       ok.select(col("url").as("id")).filter(!md5Slice(col("id"))), verify,
       maxBlock, keyFn = identity)
-    clusterSizes(DeltaDedup.attach(spark, blkAll, base.edges, base.assign,
-      verify, maxBlock, keyFn = identity).assign)
-      .localCheckpoint(eager = true)
+    PlanCut("ert_sizes")(clusterSizes(DeltaDedup.attach(spark, blkAll,
+      base.edges, base.assign, verify, maxBlock, keyFn = identity).assign))
   }
 
   /** Axis-aligned sign-LSH bucket: the sign pattern of the first nPlanes

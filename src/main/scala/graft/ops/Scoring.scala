@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
@@ -64,6 +64,18 @@ object Scoring {
         col("surface").as("surface_a"), col("ctx").as("ctx_a")), Seq("mid_a"))
       .join(m.select(col("mention_id").as("mid_b"), col("url").as("url_b"),
         col("surface").as("surface_b"), col("ctx").as("ctx_b")), Seq("mid_b"))
+  }
+
+  /** Estimated in-memory bytes of a mentions table's hydration projection,
+    * as an aggregate Column (for `agg` or an `observe`): Σ UTF-8 bytes of
+    * surface + ctx + url, plus a 24 B per-row envelope. octet_length counts
+    * multi-byte text in bytes, not chars; each column is coalesced to 0 so
+    * a null never erases the row's other columns or its fixed overhead.
+    * The input of the broadcast-hydration gate
+    * (PipelineConfig.broadcastHydration). */
+  def mentionsBytes: Column = {
+    def oct(c: String) = coalesce(octet_length(col(c)).cast("long"), lit(0L))
+    coalesce(sum(oct("surface") + oct("ctx") + oct("url") + lit(24L)), lit(0L))
   }
 
   /** Attach feature + score columns to hydrated pairs. Expects columns

@@ -75,8 +75,7 @@ object IncrAB {
       // same deliverables (merged clusters + merged scored row counts)
       val base = Incremental.stateFromCheckpoint(spark, baseCfg.checkpointDir)
       val tA0 = System.nanoTime()
-      val res = Incremental.attach(spark, base, deltaInput, dict, baseCfg,
-        verbose = true)
+      val res = Incremental.attach(spark, base, deltaInput, dict, baseCfg)
       val attachClusters = res.clusters.select("cluster_id").distinct().count()
       val scoredRows = res.scored.count()
       val wallAttach = (System.nanoTime() - tA0) / 1e9

@@ -124,6 +124,56 @@ class ClusteringSpec extends SparkSpec {
       loop.assign.as[(String, String)].collect().sorted
   }
 
+  test("the loop's partition count is evaluated only when the loop runs") {
+    val matches = Seq(("a", "b", true), ("b", "c", true))
+      .toDF("url_a", "url_b", "is_match")
+    val nodes = Seq("a", "b", "c").toDF("url")
+    var sized = 0
+    def run(budget: Long) = Clustering.clusters(spark, matches, nodes,
+      partitions = { sized += 1; Some(2) }, driverBudgetBytes = budget).collect()
+    run(DriverBudget.bytes)
+    sized shouldBe 0
+    run(0L)
+    sized shouldBe 1
+  }
+
+  test("resolveFlips equals clusters() over the flipped edge set") {
+    // base: chain 1-2-3-4, pair 10-11, isolated 12
+    val baseEdges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+    val baseNodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L)
+    // (case, removed edges, added edges, new nodes, deleted nodes)
+    val changes = Seq(
+      ("split", Seq((2L, 3L)), Nil, Nil, Nil),
+      ("merge", Nil, Seq((4L, 10L), (12L, 13L)), Seq(13L, 14L), Nil),
+      ("removed node", Seq((1L, 2L), (2L, 3L)), Nil, Nil, Seq(2L)))
+    // url keys order "p10" < "p2"; lpad keys order like the numbers
+    val keyings = Seq[(String, Long => String)](
+      "url" -> (i => s"https://site.example/p$i"),
+      "lpad" -> (i => f"$i%020d"))
+    for ((keying, key) <- keyings; (name, removed, added, newNodes, deleted) <- changes)
+      withClue(s"[$keying, $name] ") {
+        def edgeDf(es: Seq[(Long, Long)]) =
+          es.map { case (a, b) => (key(a), key(b), true) }
+            .toDF("url_a", "url_b", "is_match")
+        def nodeDf(ns: Seq[Long]) = ns.map(key).toDF("url")
+        val baseAssign = Clustering.clusters(spark, edgeDf(baseEdges), nodeDf(baseNodes))
+        val res = Clustering.resolveFlips(spark, "test", edgeDf(baseEdges), baseAssign,
+          edgeDf(removed).select("url_a", "url_b"), edgeDf(added).select("url_a", "url_b"),
+          changedNodes = if (deleted.isEmpty) Nil else Seq(nodeDf(deleted)),
+          subNodes = _.join(nodeDf(deleted), Seq("url"), "left_anti")
+            .union(nodeDf(newNodes)).distinct())
+        val expected = Clustering.clusters(spark,
+          edgeDf(baseEdges.filterNot(removed.contains) ++ added),
+          nodeDf(baseNodes.filterNot(deleted.contains) ++ newNodes))
+        res.assign.as[(String, String)].collect().sorted shouldBe
+          expected.as[(String, String)].collect().sorted
+        val baseLabel = baseAssign.as[(String, String)].collect().toMap
+        val touched = (removed ++ added).flatMap(e => Seq(e._1, e._2)) ++ deleted
+        res.affectedLabels.as[String].collect().toSet shouldBe
+          touched.map(key).flatMap(baseLabel.get).toSet
+      }
+  }
+
   test("clusters() assigns isolated nodes to themselves") {
     val matches = Seq(("a", "b", true), ("c", "d", false))
       .toDF("url_a", "url_b", "is_match")

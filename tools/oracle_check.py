@@ -4,7 +4,8 @@ query dumped by `graft.Verify <sfDir> <outDir>`, run the DuckDB oracle SQL on
 the same parquet tables and compare rows / schema / value-hash the way the
 driver does (columns sorted by name, rows sorted by all columns, pandas value
 hash). Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
-Exits 1 when any query is BAD (an error, or a row/schema/hash mismatch).
+Exits 1 when any query is BAD: an error, a row/schema/hash mismatch, an
+output dir with no oracle, or an oracle with no output dir.
 """
 import glob
 import json
@@ -36,6 +37,8 @@ def main(sf_dir: str, out_dir: str) -> int:
     report = {}
     names = sorted(os.path.basename(d) for d in glob.glob(os.path.join(out_dir, "*"))
                    if os.path.isdir(d))
+    for name in sorted(set(oracles) - set(names)):
+        report[name] = {"err": "no_output"}
     for name in names:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         spark_df = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True) \
@@ -68,9 +71,8 @@ def main(sf_dir: str, out_dir: str) -> int:
         except Exception as e:  # noqa: BLE001
             report[name] = {"err": str(e)[:500], "spark_rows": len(spark_df)}
     print(json.dumps(report, indent=1))
-    bad = [k for k, v in report.items()
-           if v.get("err") not in (None, "no_oracle") or
-           (v.get("err") is None and not v.get("hash_match"))]
+    bad = sorted(k for k, v in report.items()
+                 if v.get("err") is not None or not v.get("hash_match"))
     print(f"GREEN: {len(report) - len(bad)}/{len(report)}  BAD: {bad}")
     return 1 if bad else 0
 
