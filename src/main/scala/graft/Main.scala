@@ -12,11 +12,12 @@ import graft.ops.Metrics
   * gold pairs, and prints a one-line JSON summary.
   *
   * Usage: graft.Main <checkpointDir> [nPages] [nEntities] [--no-resume]
-  *   [--fit] [--durable-cc] [--shuffle-hydration]
+  *   [--fit] [--durable-cc] [--shuffle-hydration] [--no-eval]
   *
   * --fit inserts the in-engine training stage (weak labels -> IRLS -> swept
   * threshold) and scores with the FITTED model (committed/reloaded as the
-  * <ckpt>/s35_model artifact) instead of the default weights.
+  * <ckpt>/s35_model artifact) instead of the default weights. --no-eval
+  * skips the gold-pair F1 evaluation and prints -1 in its fields.
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -14,15 +14,16 @@ import graft.ops.{Ann, Dedup, Extract, Incremental, Multimodal, Scoring, TextOps
   * documents/embeddings. EVERY query has a DuckDB oracle in `oracleSql`
   * (column names aligned on both sides; money aggregates cast to DECIMAL
   * before summing so both engines produce exact, order-independent
-  * results). The near-dup/ANN family and the ER rows (g01, g15, g18) achieve
-  * this by running oracle-portable md5 twins (ops/Portable.scala) in
-  * `queries` while Bench measures the production hash family under the same
-  * names (`benchOverrides`); the ER rows read a fixture parquet both engines
-  * read. The twins differ from production only in the hash kernel: the
-  * batch/attach/detach dataflow behind g15-g18 is ops/DeltaDedup itself,
-  * the code the production minhash dedup state runs. The production ER
-  * paths are pinned by ProdFlagshipSpec / IncrementalSpec and the ScalaTest
-  * gates (SURVEY.md §5.2).
+  * results). The near-dup/ANN family and the ER rows (g01, g15, g18, g19)
+  * achieve this by running oracle-portable md5 twins (ops/Portable.scala)
+  * in `queries` while Bench measures the production hash family under the
+  * same names (`benchOverrides`); the ER rows read a fixture parquet both
+  * engines read. A twin is a kernel, not a copy: it calls the production
+  * dataflow (Dedup.simhashDups / embeddingDups, Ann.writeBucketedBy /
+  * probeTopK, ops/DeltaDedup's batch/attach/detach behind g01/g02/g04 and
+  * g15-g20) with an md5 or axis-sign hash. The
+  * production ER paths are pinned by ProdFlagshipSpec / IncrementalSpec and
+  * the ScalaTest gates (SURVEY.md §5.2).
   */
 object SparkEntry {
 
@@ -324,6 +325,15 @@ object SparkEntry {
         Synth.pages(s, p).toDF(), Synth.dict(s, p).toDF())
     }),
 
+    // g19: g15 at a block cap of 8, where dictionary and LSH buckets CROSS
+    // the cap when the delta lands — the attach's per-pair survivor check
+    // runs on real evictions. Oracle: the g01 full-batch SQL at cap 8.
+    "g19_incremental_er_cap8" -> ((s, _) => {
+      val p = FlagshipParams
+      graft.ops.Portable.erClustersPortableIncremental(s,
+        Synth.pages(s, p).toDF(), Synth.dict(s, p).toDF(), maxBlock = 8)
+    }),
+
     // Near-dup family (g02/g03/g04/g11): the queries run the ORACLE-PORTABLE
     // twins (ops/Portable.scala — md5 hash family, identical capped
     // candidates → exact verify → CC dataflow) so the driver's DuckDB can
@@ -342,8 +352,9 @@ object SparkEntry {
     // get a per-pair survivor check) and re-solving only dissolved CC
     // components. The oracle replays the FULL BATCH g02 SQL: hash equality
     // proves attach == from-scratch dedup in an independent engine; the
-    // engine-side pin is ProdTwinAgreementSpec's g16 test. Bench bounds the
-    // md5 twin's cost via a deterministic doc_id%10 slice (benchOverrides).
+    // engine-side pin is ProdTwinAgreementSpec's g16 test. Bench overrides
+    // g16 to the production Dedup.minhashNearDupAttach of a 2% delta against
+    // the committed state (benchOverrides).
     "g16_incremental_neardup" -> ((s, d) =>
       graft.ops.Portable.nearDupMd5Incremental(s, t(s, d, "documents"),
         "doc_id", Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)),
@@ -362,6 +373,14 @@ object SparkEntry {
     "g17_incremental_neardup_delete" -> ((s, d) =>
       graft.ops.Portable.nearDupMd5Detach(s, t(s, d, "documents"),
         "doc_id", Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)),
+
+    // g20: g17 at a bucket cap of 3, where over-cap buckets drop back
+    // under the cap when the slice is deleted — the detach's stop-key
+    // re-entry branch runs on real buckets. Oracle: the g17 SQL at cap 3.
+    "g20_incremental_neardup_delete_cap3" -> ((s, d) =>
+      graft.ops.Portable.nearDupMd5Detach(s, t(s, d, "documents"),
+        "doc_id", Dedup.charShingles(lower(col("text")), 5), threshold = 0.8,
+        maxBucket = 3)),
 
     "g03_docs_simhash_neardup" -> ((s, d) =>
       graft.ops.Portable.simhashNearDupMd5(s, t(s, d, "documents"))),
@@ -871,7 +890,7 @@ object SparkEntry {
     }))
 
   /** Shared oracle-SQL fragments for the portable near-dup family: md5
-    * minhash-LSH candidates (16 hashes, 8 bands x 2 rows, bucket cap 256)
+    * minhash-LSH candidates (16 hashes, 8 bands x 2 rows, bucket cap `cap`)
     * over a `sets(doc_id, sh)` CTE, exact set-Jaccard verification, and CC
     * via a recursive-CTE transitive closure — the independent re-derivation
     * of Clustering.connectedComponents' min-label semantics. */
@@ -881,14 +900,15 @@ object SparkEntry {
          UNION SELECT r.u, d.v FROM reach r JOIN und d ON r.v = d.u WHERE d.v <> r.u)
        SELECT u AS $outId, min(v) AS dup_of FROM reach GROUP BY u HAVING min(v) < u"""
 
-  private def md5NearDupSql(setCtes: String, threshold: String): String =
+  private def md5NearDupSql(setCtes: String, threshold: String,
+      cap: Int): String =
     s"""WITH RECURSIVE $setCtes,
        sig AS (SELECT doc_id, list_transform(range(0, 16), h ->
            list_aggregate(list_transform(sh, s -> md5(s || ':' || h)), 'min')) AS sig
          FROM sets),
        bands AS (SELECT doc_id, 'b' || b || '|' || sig[2*b+1] || '|' || sig[2*b+2] AS bucket
          FROM sig CROSS JOIN (SELECT unnest(range(0,8)) AS b)),
-       sized AS (SELECT bucket FROM bands GROUP BY bucket HAVING count(*) > 1 AND count(*) <= 256),
+       sized AS (SELECT bucket FROM bands GROUP BY bucket HAVING count(*) > 1 AND count(*) <= $cap),
        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          FROM bands a JOIN sized s ON a.bucket = s.bucket
          JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
@@ -899,22 +919,33 @@ object SparkEntry {
                cast(len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)) as double) >= $threshold),
        ${ccTailSql("doc_id")}"""
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
-    * same parquet tables. g01's oracle reads the flagship fixture that
-    * graft.Verify dumps to parquet (the `__FIXTURE_DIR__` placeholder is
-    * substituted with the dump path when Verify writes oracle_sql.json), so
-    * every queries entry now has an oracle row. */
-  /** Full-batch portable-twin replay over the flagship fixture: the
-    * oracle for BOTH g01 (batch twin) and g15 (incremental twin — the
-    * attach algebra must reproduce the batch result exactly). */
-  /** g18's oracle is the SAME full-batch replay restricted to the urls that
+  /** The `sets(doc_id, sh)` CTE of the char-5-shingle twins (g02, g16, g17,
+    * g20): distinct 5-shingles of lower(text) over the documents `where`
+    * selects. */
+  private def shingleSetsSql(where: String): String =
+    s"""sets AS (SELECT doc_id,
+           CASE WHEN length(lower(text)) < 5 THEN [lower(text)]
+                ELSE list_distinct(list_transform(range(1, length(lower(text)) - 3),
+                       i -> substring(lower(text), i, 5))) END AS sh
+         FROM documents$where)"""
+
+  /** The md5 slice the delete twins remove (first hex digit of md5(id) in
+    * c..f — Portable's md5Slice), as the WHERE clause keeping the rest. */
+  private def md5SliceOutSql(id: String): String =
+    s" WHERE substring(md5(cast($id AS varchar)), 1, 1) NOT IN ('c','d','e','f')"
+
+  /** g18's oracle is the full-batch replay restricted to the urls that
     * survive the delete — the detach twin must reproduce it exactly. */
   private lazy val erTwinDetachSql: String = erTwinBatchSql(
-    " WHERE substring(md5(url), 1, 1) NOT IN ('c','d','e','f')")
+    md5SliceOutSql("url"), 256)
 
-  private lazy val erTwinFullBatchSql: String = erTwinBatchSql("")
+  /** The oracle for BOTH g01 (batch twin) and g15 (incremental twin — the
+    * attach algebra must reproduce the batch result exactly). */
+  private lazy val erTwinFullBatchSql: String = erTwinBatchSql("", 256)
 
-  private def erTwinBatchSql(pagesWhere: String): String =
+  /** Full-batch portable-twin replay over the flagship fixture pages
+    * `pagesWhere` selects, at block cap `cap`. */
+  private def erTwinBatchSql(pagesWhere: String, cap: Int): String =
       s"""WITH RECURSIVE pages AS (
            SELECT * FROM read_parquet('__FIXTURE_DIR__/pages.parquet/*.parquet')$pagesWhere),
          dict AS (SELECT * FROM read_parquet('__FIXTURE_DIR__/dict.parquet/*.parquet')),
@@ -945,7 +976,7 @@ object SparkEntry {
          blocks AS (SELECT DISTINCT bucket, id FROM
            (SELECT * FROM dictblk UNION ALL SELECT * FROM lshblk)),
          sized AS (SELECT bucket FROM blocks GROUP BY bucket
-           HAVING count(*) > 1 AND count(*) <= 256),
+           HAVING count(*) > 1 AND count(*) <= $cap),
          cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
            FROM blocks a JOIN sized s ON a.bucket = s.bucket
            JOIN blocks b ON a.bucket = b.bucket AND a.id < b.id),
@@ -962,6 +993,11 @@ object SparkEntry {
          cc AS (SELECT u, min(v) AS cluster_id FROM reach GROUP BY u HAVING min(v) < u)
          SELECT cluster_id, count(*) + 1 AS cluster_size FROM cc GROUP BY cluster_id"""
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
+    * same parquet tables. The ER rows read the flagship fixture that
+    * graft.Verify dumps to parquet (the `__FIXTURE_DIR__` placeholder is
+    * substituted with the dump path when Verify writes oracle_sql.json), so
+    * every queries entry has an oracle row. */
   def oracleSql: Map[String, String] = Map(
     // the full portable ER pipeline rebuilt in SQL: snapshot window → md5
     // extraction invariant → regexp mention extraction → dict-join + md5
@@ -972,6 +1008,8 @@ object SparkEntry {
     // same fixture, so its oracle replay is the SAME full-batch twin SQL
     "g15_incremental_er" -> erTwinFullBatchSql,
     "g18_incremental_er_delete" -> erTwinDetachSql,
+    // g19 (g15 at block cap 8) must equal the full batch at the same cap
+    "g19_incremental_er_cap8" -> erTwinBatchSql("", 8),
     "q32_pairwise_f1" ->
       """WITH ev AS (SELECT user_id, event_id, value,
            try_cast(json_extract_string(props, '$.k') as int) AS k FROM events),
@@ -1149,32 +1187,18 @@ object SparkEntry {
            CASE WHEN regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://') = ''
                 THEN url ELSE h END AS canon
          FROM s8""",
-    "g02_docs_minhash_neardup" -> md5NearDupSql(
-      """sets AS (SELECT doc_id,
-           CASE WHEN length(lower(text)) < 5 THEN [lower(text)]
-                ELSE list_distinct(list_transform(range(1, length(lower(text)) - 3),
-                       i -> substring(lower(text), i, 5))) END AS sh
-         FROM documents)""", "0.8"),
+    "g02_docs_minhash_neardup" -> md5NearDupSql(shingleSetsSql(""), "0.8", 256),
     // the incremental near-dup attach (g16) must equal the full batch over
     // the same table, so its oracle replay is the SAME g02 full-batch SQL
-    "g16_incremental_neardup" -> md5NearDupSql(
-      """sets AS (SELECT doc_id,
-           CASE WHEN length(lower(text)) < 5 THEN [lower(text)]
-                ELSE list_distinct(list_transform(range(1, length(lower(text)) - 3),
-                       i -> substring(lower(text), i, 5))) END AS sh
-         FROM documents)""", "0.8"),
+    "g16_incremental_neardup" -> md5NearDupSql(shingleSetsSql(""), "0.8", 256),
     // the incremental DELETE (g17) must equal the full batch over the
     // post-delete corpus, so its oracle is the g02 SQL with the deleted md5
     // slice filtered out of the sets CTE (same split predicate as the
-    // Spark side: first hex digit of md5(doc_id) in c..f)
+    // Spark side); g20 is the same delete at bucket cap 3
     "g17_incremental_neardup_delete" -> md5NearDupSql(
-      """sets AS (SELECT doc_id,
-           CASE WHEN length(lower(text)) < 5 THEN [lower(text)]
-                ELSE list_distinct(list_transform(range(1, length(lower(text)) - 3),
-                       i -> substring(lower(text), i, 5))) END AS sh
-         FROM documents
-         WHERE substring(md5(cast(doc_id AS varchar)), 1, 1) NOT IN ('c','d','e','f'))""",
-      "0.8"),
+      shingleSetsSql(md5SliceOutSql("doc_id")), "0.8", 256),
+    "g20_incremental_neardup_delete_cap3" -> md5NearDupSql(
+      shingleSetsSql(md5SliceOutSql("doc_id")), "0.8", 3),
     "g04_docs_ngram_neardup" -> md5NearDupSql(
       """tk AS (SELECT doc_id,
            list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS t
@@ -1183,7 +1207,7 @@ object SparkEntry {
            CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
                 ELSE list_distinct(list_transform(range(1, len(t) - 1),
                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS sh
-         FROM tk)""", "0.7"),
+         FROM tk)""", "0.7", 256),
     "g03_docs_simhash_neardup" ->
       s"""WITH RECURSIVE tk AS (
            SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS t

@@ -171,15 +171,17 @@ case class ContextCosineExpr(left: Expression, right: Expression, dim: Int,
 }
 
 /** Random-hyperplane sign bucket of a float vector as one codegen'd
-  * expression — bit-identical to the built-in composition it replaces
-  * (`Ann.signBucket`: per plane p, dot(vec, ±1-pattern from
-  * xxhash64(seed, p, i) parity) > 0 sets bit p) and to the driver-side
-  * `Ann.bucketOf` mirror: all three fold Spark's XxHash64Function over
-  * (seed: long, plane: int, index: int) starting from Spark's default 42L
-  * seed. Exists because the aggregate/zip_with composition is interpreted
-  * per element (nPlanes x dim hash+multiply evaluations per row — measured
-  * 2.3s for 5000 docs at 12 planes x 256 dims, the dominant term of the
-  * embedding near-dup bucketing pass).
+  * expression: per plane p, dot(vec, ±1-pattern from xxhash64(seed, p, i)
+  * parity) > 0 sets bit p, folding Spark's XxHash64Function over
+  * (seed: long, plane: int, index: int) from Spark's default 42L seed —
+  * bit-identical to the built-in aggregate/zip_with composition it
+  * replaces. The one definition of the xxhash sign kernel: the column
+  * expression (`Ann.signBucket`) and the driver-side bucket of a literal
+  * query (`Ann.bucketOf`) both call `bucket`, and the bucketed dataflows
+  * take it as their kernel column. Exists because the composition is
+  * interpreted per element (nPlanes x dim hash+multiply evaluations per
+  * row — measured 2.3s for 5000 docs at 12 planes x 256 dims, the dominant
+  * term of the embedding near-dup bucketing pass).
   */
 object SignBucket {
   def bucket(vec: ArrayData, nPlanes: Int, seed: Long): Int = {

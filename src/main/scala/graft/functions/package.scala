@@ -61,7 +61,10 @@ package object functions {
     e2col(TokenJaccardExpr(col2e(a.cast("string")), col2e(b.cast("string"))))
 
   /** Random-hyperplane sign bucket (codegen'd; bit-identical to the
-    * aggregate/zip_with composition it replaces and to Ann.bucketOf). */
+    * aggregate/zip_with composition it replaces). The production bucket
+    * kernel of the ANN and embedding near-dup dataflows, which take the
+    * bucket as a column (the oracle twins pass Portable.axisSignBucket);
+    * Ann.bucketOf runs the same SignBucket.bucket on the driver. */
   def sign_bucket(vec: Column, nPlanes: Int, seed: Long = 42L): Column =
     e2col(SignBucketExpr(col2e(vec.cast(ArrayType(FloatType))), nPlanes, seed))
 

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
-import graft.expr.HashUtil
+import graft.expr.SignBucket
 import graft.functions.cosine_sim
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -32,13 +33,14 @@ object Ann {
     * expression (graft.expr.SignBucketExpr): the former aggregate/zip_with
     * built-in composition was interpreted per element and dominated the
     * bucketing pass at high plane x dim counts (2.3s for 5000 docs at
-    * 12x256); the expression is bit-identical to it and to the driver-side
-    * bucketOf mirror below (all fold Spark's XxHash64Function the same way —
-    * ExprSpec pins composition == expression == bucketOf). */
+    * 12x256). The driver-side bucketOf calls the same kernel
+    * (graft.expr.SignBucket.bucket) on the literal query. */
   def signBucket(vec: Column, nPlanes: Int, seed: Long): Column =
     graft.functions.sign_bucket(vec, nPlanes, seed)
 
-  /** Exact brute-force cosine top-k against a literal query vector. */
+  /** Exact brute-force cosine top-k against a literal query vector — also
+    * the scoring tail of every pruned read below: each one filters `embs`
+    * to its probed rows and ranks what is left here. */
   def bruteForceTopK(embs: DataFrame, query: Array[Float], k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = array(query.map(lit): _*)
@@ -48,22 +50,20 @@ object Ann {
       .limit(k)
   }
 
+  /** The query's sign bucket plus its nPlanes hamming-1 neighbors. */
+  private def probesOf(query: Array[Float], nPlanes: Int, seed: Long): Seq[Int] = {
+    val qBucket = bucketOf(query, nPlanes, seed)
+    qBucket +: (0 until nPlanes).map(b => qBucket ^ (1 << b))
+  }
+
   /** LSH-bucketed top-k: scan only rows whose sign bucket is the query's
     * bucket or differs by one bit (multi-probe). Recall is tested against
     * bruteForceTopK on the fixture. */
   def lshTopK(embs: DataFrame, query: Array[Float], k: Int,
       nPlanes: Int = 8, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qBucket = bucketOf(query, nPlanes, seed)
-    val probes = qBucket +: (0 until nPlanes).map(b => qBucket ^ (1 << b))
-    val q = array(query.map(lit): _*)
-    embs
-      .withColumn("__bucket", signBucket(col(vecCol), nPlanes, seed))
-      .filter(col("__bucket").isin(probes: _*))
-      .select(col(idCol), round(cosine_sim(col(vecCol), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    bruteForceTopK(embs.filter(signBucket(col(vecCol), nPlanes, seed)
+      .isin(probesOf(query, nPlanes, seed): _*)), query, k, idCol, vecCol)
 
   /** IVF-style coarse quantization bucket: the (1-based) index of the
     * maximum component among the first m — a deterministic, engine-portable
@@ -80,11 +80,8 @@ object Ann {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val head = query.take(m)
     val qBucket = head.indexOf(head.max) + 1 // first-index-of-max, 1-based
-    val q = array(query.map(lit): _*)
-    embs.filter(ivfBucket(col(vecCol), m) === qBucket)
-      .select(col(idCol), round(cosine_sim(col(vecCol), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+    bruteForceTopK(embs.filter(ivfBucket(col(vecCol), m) === qBucket),
+      query, k, idCol, vecCol)
   }
 
   /** Materialize the embeddings table PARTITIONED BY sign bucket: the
@@ -93,74 +90,43 @@ object Ann {
     * the full table (AnnTextOpsSpec asserts selectedPartitions < total).
     * At 100 TB this is the difference between an O(n) scan per query and a
     * ~((1+nPlanes)/2^nPlanes)·n probe. */
-  /** The frame writeBucketed materializes (exposed for the plan audit).
-    * Explicit-count repartition by the partition column: per-file creation
-    * (open + footer + close) is the measured cost of a 2^nPlanes-dir write
-    * (5.2s of g12's 5.6s at sf0.1 was ONE task sequentially creating 252
-    * files), so spread the buckets over the cores. The explicit count
-    * matters: a bare repartition(col) of a small table is AQE-coalesced
-    * back to one task. Each bucket hashes to exactly one task, so every
-    * dir still holds one file (guide §6 file sizing). */
-  def bucketedFrame(embs: DataFrame, nPlanes: Int = 8, seed: Long = 42L,
-      vecCol: String = "embedding"): DataFrame =
-    embs.withColumn("bucket", signBucket(col(vecCol), nPlanes, seed))
-      .repartition(embs.sparkSession.sparkContext.defaultParallelism,
-        col("bucket"))
-
   def writeBucketed(embs: DataFrame, path: String, nPlanes: Int = 8,
       seed: Long = 42L, vecCol: String = "embedding"): Unit =
-    bucketedFrame(embs, nPlanes, seed, vecCol)
+    writeBucketedBy(embs, path, signBucket(col(vecCol), nPlanes, seed))
+
+  /** The bucket-partitioned write, for any bucket kernel: `embs` plus a
+    * `bucket` partition column. Explicit-count repartition by the partition
+    * column: per-file creation (open + footer + close) is the measured cost
+    * of a 2^nPlanes-dir write (5.2s of g12's 5.6s at sf0.1 was ONE task
+    * sequentially creating 252 files), so spread the buckets over the
+    * cores. The explicit count matters: a bare repartition(col) of a small
+    * table is AQE-coalesced back to one task. Each bucket hashes to exactly
+    * one task, so every dir still holds one file (guide §6 file sizing). */
+  private[ops] def writeBucketedBy(embs: DataFrame, path: String,
+      bucket: Column): Unit =
+    embs.withColumn("bucket", bucket)
+      .repartition(embs.sparkSession.sparkContext.defaultParallelism,
+        col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
 
   /** LSH top-k over a bucket-partitioned table written by writeBucketed:
     * the bucket filter is a partition filter, so the scan reads only the
     * probed directories (verified by the pruning test). Must be called with
     * the SAME nPlanes/seed as the write. */
-  def lshTopKBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def lshTopKBucketed(spark: SparkSession, path: String,
       query: Array[Float], k: Int, nPlanes: Int = 8, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qBucket = bucketOf(query, nPlanes, seed)
-    val probes = (qBucket +: (0 until nPlanes).map(b => qBucket ^ (1 << b))).map(Int.box)
-    val q = array(query.map(lit): _*)
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*))
-      .select(col(idCol), round(cosine_sim(col(vecCol), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probeTopK(spark, path, probesOf(query, nPlanes, seed), query, k, idCol, vecCol)
 
-  /** Driver-side bucket of a literal query vector — must mirror signBucket's
-    * arithmetic exactly (same xxhash64 seed/args). Uses Spark's XXH64 via a
-    * one-row local relation to avoid duplicating hash internals. */
-  def bucketOf(query: Array[Float], nPlanes: Int, seed: Long): Int = {
-    var bucket = 0
-    var p = 0
-    while (p < nPlanes) {
-      var dot = 0.0
-      var i = 0
-      while (i < query.length) {
-        val h = xxh64Long(seed, p, i)
-        val sign = if (((h % 2) + 2) % 2 == 0) 1.0 else -1.0
-        dot += query(i) * sign
-        i += 1
-      }
-      if (dot > 0) bucket |= (1 << p)
-      p += 1
-    }
-    bucket
-  }
+  /** The pruned probe read, for any bucket kernel: cosine top-k over only
+    * the `probes` partitions of a writeBucketedBy table. */
+  private[ops] def probeTopK(spark: SparkSession, path: String, probes: Seq[Any],
+      query: Array[Float], k: Int, idCol: String, vecCol: String): DataFrame =
+    bruteForceTopK(spark.read.parquet(path).filter(col("bucket").isin(probes: _*)),
+      query, k, idCol, vecCol)
 
-  /** Spark-compatible xxhash64 of (long, int-as-long... ) — delegate to the
-    * catalyst implementation so the driver-side bucket matches the column
-    * expression bit-for-bit. */
-  private def xxh64Long(seed: Long, plane: Int, i: Int): Long = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    // xxhash64(lit(seed), lit(plane), i): seed starts at 42L (Spark default),
-    // then folds each argument in order
-    var h = XxHash64Function.hash(seed, LongType, 42L)
-    h = XxHash64Function.hash(plane, IntegerType, h)
-    h = XxHash64Function.hash(i, IntegerType, h)
-    h
-  }
+  /** Driver-side bucket of a literal query vector: the signBucket kernel
+    * itself, called on the query as ArrayData. */
+  def bucketOf(query: Array[Float], nPlanes: Int, seed: Long): Int =
+    SignBucket.bucket(ArrayData.toArrayData(query), nPlanes, seed)
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,7 @@ object Dedup {
 
   /** Character k-shingle set via built-ins (sequence+transform+substring) —
     * used for exact Jaccard verification of LSH candidates. */
-  def charShingles(text: org.apache.spark.sql.Column, k: Int):
-      org.apache.spark.sql.Column =
+  def charShingles(text: Column, k: Int): Column =
     when(length(text) < k, array(text)).otherwise(
       array_distinct(transform(
         sequence(lit(1), length(text) - k + 1),
@@ -99,7 +98,7 @@ object Dedup {
     val texts = docs.select(col(idCol).as("id"),
       shingle_hashes(lower(col(textCol)), 5).as("v"))
     clusterDups(spark, DeltaDedup.verifyBy(texts,
-      sorted_jaccard(_, _) >= threshold)(cands), docs, idCol)
+      sorted_jaccard(_, _) >= threshold)(cands), idCol)
   }
 
   /** SimHash near-dup: 64-bit simhash banded into 4x16-bit bands (any shared
@@ -107,19 +106,30 @@ object Dedup {
     * by true hamming distance <= maxHamming. */
   def simhashNearDup(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
-      maxHamming: Int = 3, maxBucket: Int = 256, seed: Long = 42L): DataFrame = {
-    val hashed = docs.select(col(idCol).as("id"),
-      simhash64(lower(col(textCol)), seed).as("v"))
+      maxHamming: Int = 3, maxBucket: Int = 256, seed: Long = 42L): DataFrame =
+    simhashDups(spark, docs, idCol, simhash64(lower(col(textCol)), seed),
+      bandBits = 16, maxHamming, maxBucket)
+
+  /** The simhash near-dup dataflow over any simhash kernel column `hash`:
+    * the (id, hash) projection is cached once, banded into 4 bands of
+    * `bandBits` bits (capped candidates), verified by true hamming distance
+    * <= maxHamming, CC-clustered. Production passes the 64-bit xxhash
+    * kernel in 16-bit bands; Portable.simhashNearDupMd5 the 60-bit md5
+    * kernel in 15-bit bands. */
+  private[ops] def simhashDups(spark: SparkSession, docs: DataFrame,
+      idCol: String, hash: Column, bandBits: Int, maxHamming: Int,
+      maxBucket: Int): DataFrame = {
+    val hashed = docs.select(col(idCol).as("id"), hash.as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val banded = hashed.select(col("id"),
         explode(array((0 until 4).map(b =>
-          concat_ws(":", lit(b),
-            shiftrightunsigned(col("v"), b * 16).bitwiseAND(lit(0xffffL)))): _*))
+          concat_ws(":", lit(b), shiftrightunsigned(col("v"), b * bandBits)
+            .bitwiseAND(lit((1L << bandBits) - 1)))): _*))
           .as("bucket"))
       clusterDups(spark, DeltaDedup.verifyBy(hashed,
           (a, b) => bit_count(a.bitwiseXOR(b)) <= maxHamming)(
-        DeltaDedup.cappedPairs(banded, maxBucket)), docs, idCol)
+        DeltaDedup.cappedPairs(banded, maxBucket)), idCol)
     } finally hashed.unpersist()
   }
 
@@ -143,7 +153,7 @@ object Dedup {
     val texts = docs.select(col(idCol).as("id"),
       ngram_hashes(col(textCol), n).as("v"))
     clusterDups(spark, DeltaDedup.verifyBy(texts,
-      sorted_jaccard(_, _) >= threshold)(cands), docs, idCol)
+      sorted_jaccard(_, _) >= threshold)(cands), idCol)
   }
 
   /** Shared-candidate session for one corpus: computes + caches the minhash
@@ -182,24 +192,35 @@ object Dedup {
   def embeddingNearDup(spark: SparkSession, embs: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.95, nPlanes: Int = 12, maxBucket: Int = 256,
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L): DataFrame =
+    embeddingDups(spark, embs, idCol, vecCol,
+      Ann.signBucket(col(vecCol), nPlanes, seed), threshold, maxBucket)
+
+  /** The embedding near-dup dataflow over any bucket kernel column `bucket`
+    * (production: Ann.signBucket; Portable.embeddingNearDupPortable: the
+    * axis-sign bucket): capped bucket candidates, cosine >= threshold, CC. */
+  private[ops] def embeddingDups(spark: SparkSession, embs: DataFrame,
+      idCol: String, vecCol: String, bucket: Column, threshold: Double,
+      maxBucket: Int): DataFrame = {
     val bucketed = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Ann.signBucket(col(vecCol), nPlanes, seed).as("bucket"))
+        bucket.as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val verified = DeltaDedup.verifyBy(bucketed,
           cosine_sim(_, _) >= threshold)(
         DeltaDedup.cappedPairs(bucketed.select("id", "bucket"), maxBucket))
-      clusterDups(spark, verified, embs.select(col(idCol)), idCol)
+      clusterDups(spark, verified, idCol)
     } finally bucketed.unpersist()
   }
 
   /** Cluster verified duplicate edges with CC; emit (id, dup_of) rows for
     * docs whose representative differs from themselves. CC compares node ids
     * as strings, so numeric ids are zero-padded first — string order must
-    * equal numeric order for "dup_of = min doc id" to hold. */
+    * equal numeric order for "dup_of = min doc id" to hold. The production
+    * dups-only near-dup outputs end here; the families with attach/detach
+    * forms build their committed state with DeltaDedup.batch instead. */
   private[ops] def clusterDups(spark: SparkSession, edges: DataFrame,
-      docs: DataFrame, idCol: String): DataFrame = {
+      idCol: String): DataFrame = {
     val cc = Clustering.connectedComponents(spark, edges.select(
       DeltaDedup.key(col("id_a")).as("u"), DeltaDedup.key(col("id_b")).as("v")))
     cc.select(col("url").cast("long").as(idCol),

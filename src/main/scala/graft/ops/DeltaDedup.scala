@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   * touching only delta-adjacent state.
   *
   * Generic over the hash kernel: callers pass the (id, bucket) table, the
-  * `verify` function and the CC key function as plain arguments. The
-  * production xxhash family (Dedup.minhashDedupState / minhashNearDupAttach /
-  * minhashNearDupDetach), the md5 near-dup twins (Portable.nearDupMd5
-  * Incremental / Detach, cross-engine rows g16/g17) and the md5 ER twins
-  * (Portable.erClustersPortableIncremental / Detach, rows g15/g18, url keys
-  * with keyFn = identity) all run this code, so the survivor/cap-crossing
-  * logic cannot drift between them.
+  * `verify` function and the CC key function as plain arguments, so a twin
+  * is a kernel, not a copy. The production xxhash family
+  * (Dedup.minhashDedupState / minhashNearDupAttach / minhashNearDupDetach),
+  * the md5 near-dup twins (Portable.nearDupMd5 and its Incremental / Detach
+  * forms, cross-engine rows g02/g04 and g16/g17/g20) and the md5 ER twins
+  * (Portable.erComponentsPortable and its Incremental / Detach forms, rows
+  * g01 and g15/g18/g19, url keys with keyFn = identity) all run this code:
+  * every oracle row checks the same `batch` call its delta rows start
+  * from, and the survivor/cap-crossing logic cannot drift between them.
   *
   * Candidate-diff completeness under inserts-only deltas (band buckets only
   * GAIN members, so n_new >= n_old):

@@ -3,27 +3,28 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Oracle-portable twins of the near-dup family and the flagship ER
-  * pipeline.
+/** Oracle-portable KERNELS of the near-dup family, the bucketed ANN and
+  * the flagship ER pipeline, and the twins that plug them into the
+  * production dataflows.
   *
-  * The production operators (Dedup.*) hash with xxhash64 / the custom
-  * codegen'd kernels — fast, but no other engine can replicate them, so the
-  * driver's DuckDB oracle could only count rows. These twins run the SAME
-  * dataflow — capped LSH band candidates (DeltaDedup.cappedPairs) → exact-
-  * similarity verification → connected-components clustering, and for the
-  * incremental rows DeltaDedup.batch/attach/detach themselves — but draw
-  * every hash from md5 (which DuckDB computes bit-identically), every
-  * similarity from exact set intersection over the SAME element sets both
-  * engines can build in SQL, and every tiebreak from total orders both
-  * engines share. Only the (id, bucket) table and the verify function are
+  * The production operators hash with xxhash64 / the custom codegen'd
+  * kernels — fast, but no other engine can replicate them, so the driver's
+  * DuckDB oracle could only count rows. This object defines no dataflow of
+  * its own: every twin is a call of the one production dataflow —
+  * Dedup.simhashDups / embeddingDups, Ann.writeBucketedBy / probeTopK, and
+  * DeltaDedup.batch / attach / detach for the families with delta forms —
+  * with a kernel drawn from md5 (which DuckDB computes bit-identically),
+  * similarities from exact set intersection over the SAME element sets
+  * both engines can build in SQL, and tiebreaks from total orders both
+  * engines share. Only the hash/bucket column and the verify function are
   * twin-specific. Result: the full candidates→verify→cluster pipeline is
   * hash-checkable end-to-end against an independent SQL engine (CC verified
   * via a recursive-CTE transitive closure).
   *
-  * Use the production family for throughput (Bench overrides the g02/g03/g04/
-  * g11 bench entries back to it); use this family when cross-engine
+  * Use the production kernels for throughput (Bench overrides the g02/g03/
+  * g04/g11 bench entries back to them); use these when cross-engine
   * verifiability matters more than hash speed. Both scale identically: the
-  * plan shapes are the same, only the hash kernel differs.
+  * plans are the same, only the kernel differs.
   */
 object Portable {
 
@@ -84,15 +85,16 @@ object Portable {
   }
 
   /** Portable near-dup over any element-set column: md5-minhash band
-    * candidates (capped), exact set-Jaccard verification, CC clustering.
-    * Output (idCol, dup_of) like the production family. */
+    * candidates (capped), exact set-Jaccard verification, CC clustering —
+    * DeltaDedup.batch, the call its incremental and delete forms start
+    * from. Output (idCol, dup_of) like the production family. */
   def nearDupMd5(spark: SparkSession, docs: DataFrame, idCol: String,
       setCol: Column, threshold: Double, numHashes: Int = 16, bands: Int = 8,
       rows: Int = 2, maxBucket: Int = 256): DataFrame = {
     val (keyed, verify) = md5Kernel(docs, idCol, setCol, threshold,
       numHashes, bands, rows)
-    Dedup.clusterDups(spark, verify(DeltaDedup.cappedPairs(keyed, maxBucket)),
-      docs, idCol)
+    DeltaDedup.dups(DeltaDedup.batch(spark, keyed, keyed.select("id"), verify,
+      maxBucket).assign, idCol)
   }
 
   /** md5 slice of the id space (~25%) the incremental rows move. */
@@ -155,26 +157,14 @@ object Portable {
     conv(concat(bitsMsbFirst: _*), 2, 10).cast("long")
   }
 
-  /** Portable simhash near-dup: 4×15-bit band buckets (any shared band ⇒
-    * candidate; guarantees recall for hamming ≤ 3), capped, verified by true
-    * hamming distance, CC-clustered. */
+  /** Portable simhash near-dup: Dedup.simhashDups with the simhash60
+    * kernel in 4×15-bit band buckets (any shared band ⇒ candidate;
+    * guarantees recall for hamming ≤ 3). */
   def simhashNearDupMd5(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
-      maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
-    val hashed = docs.select(col(idCol).as("id"), simhash60(col(textCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keyed = hashed.select(col("id"),
-        explode(array((0 until 4).map(b =>
-          concat(lit("b"), lit(b.toString), lit(":"),
-            shiftrightunsigned(col("v"), b * 15).bitwiseAND(lit(32767L))
-              .cast("string"))): _*)).as("bucket"))
-      val verified = DeltaDedup.verifyBy(hashed,
-          (a, b) => bit_count(a.bitwiseXOR(b)) <= maxHamming)(
-        DeltaDedup.cappedPairs(keyed, maxBucket))
-      Dedup.clusterDups(spark, verified, docs, idCol)
-    } finally hashed.unpersist()
-  }
+      maxHamming: Int = 3, maxBucket: Int = 256): DataFrame =
+    Dedup.simhashDups(spark, docs, idCol, simhash60(col(textCol)),
+      bandBits = 15, maxHamming, maxBucket)
 
   /** Oracle-portable twin of the FLAGSHIP ER pipeline (g01): the same
     * stage sequence as Pipeline.run — latest-snapshot dedup + extraction
@@ -198,8 +188,9 @@ object Portable {
     *    planted topic words; unrelated pages share ~0.1 filler words in
     *    expectation), so it separates the shared-abbreviation traps the
     *    string features cannot (gen/Synth.scala design notes);
-    *  - clustering: Clustering.connectedComponents on url strings, checked
-    *    in SQL by the same recursive-CTE transitive closure as g02-g04/g11.
+    *  - clustering: DeltaDedup.batch's CC on url strings (keyFn =
+    *    identity, the call g15/g18 start from), checked in SQL by the same
+    *    recursive-CTE transitive closure as g02-g04/g11.
     *
     * Output: (cluster_id = min url of the component, cluster_size), clusters
     * of size >= 2 only — the shape of SparkEntry.entry. Reference analogue:
@@ -231,16 +222,10 @@ object Portable {
     * forms those false edges. */
   def erComponentsPortable(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    val ok = portableOk(pages)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val verified = portableVerify(portableToks(ok), minShared)(
-        DeltaDedup.cappedPairs(portableBuckets(portableMen(ok), dict), maxBlock))
-      // s5: CC over url strings (eager: every round materializes, so the
-      // returned frame reads only the converged cut — safe to unpersist ok)
-      Clustering.connectedComponents(spark,
-        verified.select(col("id_a").as("u"), col("id_b").as("v")))
-    } finally ok.unpersist()
+    val ok = PlanCut("ert_ok")(portableOk(pages))
+    val (blk, verify) = erKernel(ok, dict, minShared)
+    DeltaDedup.batch(spark, blk, ok.select(col("url").as("id")), verify,
+      maxBlock, keyFn = identity).assign.filter(col("url") =!= col("cluster_id"))
   }
 
   /** s0 of the portable ER twin: latest snapshot per url (md5 tiebreak),
@@ -359,23 +344,15 @@ object Portable {
     array_join(transform(slice(vec, 1, nPlanes), x =>
       when(x >= 0, lit("1")).otherwise(lit("0"))), "")
 
-  /** Bucket-partitioned write of an embeddings table keyed by the
-    * engine-portable axis-sign bucket — the oracle-checkable twin of
-    * Ann.writeBucketed (same partitionBy-the-bucket scale path, portable
-    * hash). The partition value is 'b'-prefixed so the bit string
+  /** Bucket-partitioned write of (idCol, vecCol) keyed by the engine-
+    * portable axis-sign bucket: Ann.writeBucketedBy with the portable
+    * kernel. The partition value is 'b'-prefixed so the bit string
     * round-trips as a STRING through Spark's partition-column type
     * inference (a bare "001011" would be read back as the integer 1011). */
   def writeAxisBucketed(embs: DataFrame, path: String, nPlanes: Int = 6,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    // explicit-count repartition by the partition column before the write:
-    // per-file creation dominates a 2^nPlanes-dir write from few scan tasks,
-    // and a bare repartition(col) would be AQE-coalesced back to one task —
-    // see Ann.writeBucketed
-    embs.select(col(idCol), col(vecCol),
-        concat(lit("b"), axisSignBucket(col(vecCol), nPlanes)).as("bucket"))
-      .repartition(embs.sparkSession.sparkContext.defaultParallelism,
-        col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    Ann.writeBucketedBy(embs.select(col(idCol), col(vecCol)), path,
+      concat(lit("b"), axisSignBucket(col(vecCol), nPlanes)))
 
   /** Partition-pruned multi-probe cosine top-k over a writeAxisBucketed
     * table: scans ONLY the query's bucket plus its nPlanes hamming-1
@@ -390,30 +367,16 @@ object Portable {
     val qb = query.take(nPlanes).map(x => if (x >= 0) '1' else '0').mkString
     val probes = ("b" + qb) +: (0 until nPlanes).map(i =>
       "b" + qb.updated(i, if (qb(i) == '1') '0' else '1'))
-    val q = array(query.map(lit): _*)
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*))
-      .select(col(idCol),
-        round(graft.functions.cosine_sim(col(vecCol), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+    Ann.probeTopK(spark, path, probes, query, k, idCol, vecCol)
   }
 
-  /** Portable embedding near-dup: axis-sign buckets (capped), cosine-verified
-    * (≥ threshold), CC-clustered — the capped/late-materialized pattern of
-    * Dedup.embeddingNearDup with an engine-portable bucket function. */
+  /** Portable embedding near-dup: Dedup.embeddingDups with the axis-sign
+    * bucket kernel — axis-sign buckets (capped), cosine-verified
+    * (≥ threshold), CC-clustered. */
   def embeddingNearDupPortable(spark: SparkSession, embs: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.4, nPlanes: Int = 6,
-      maxBucket: Int = 256): DataFrame = {
-    val bucketed = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
-        axisSignBucket(col(vecCol), nPlanes).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val verified = DeltaDedup.verifyBy(bucketed,
-          graft.functions.cosine_sim(_, _) >= threshold)(
-        DeltaDedup.cappedPairs(bucketed.select("id", "bucket"), maxBucket))
-      Dedup.clusterDups(spark, verified, embs.select(col(idCol)), idCol)
-    } finally bucketed.unpersist()
-  }
+      maxBucket: Int = 256): DataFrame =
+    Dedup.embeddingDups(spark, embs, idCol, vecCol,
+      axisSignBucket(col(vecCol), nPlanes), threshold, maxBucket)
 }

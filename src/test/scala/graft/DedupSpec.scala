@@ -96,6 +96,34 @@ class DedupSpec extends SparkSpec {
     uncapped.get(1L) shouldBe Some(0L)
   }
 
+  test("simhash near-dup bucket cap drops a planted hot bucket, keeps the rest") {
+    // 20 identical boilerplate texts = one hot bucket in every band
+    val hot = (10L to 29L).map(i => (i,
+      "subscribe to our newsletter for the latest offers and news every week"))
+    // 21 distinct tokens, each three times: every bit's vote is an odd
+    // multiple of 3, so one appended token cannot flip it — the pair is a
+    // near-dup at hamming 0 under any per-occurrence simhash kernel
+    val text = Seq.fill(3)("rare disease registry patients report fatigue " +
+      "muscle weakness and slow nerve conduction in early childhood onset " +
+      "cases across several european clinics").mkString(" ")
+    val docs = (hot ++ Seq((0L, text), (1L, text + " today")))
+      .toDF("doc_id", "text")
+    val kernels = Seq[Int => org.apache.spark.sql.DataFrame](
+      cap => Dedup.simhashNearDup(spark, docs, maxBucket = cap),
+      cap => graft.ops.Portable.simhashNearDupMd5(spark, docs, maxBucket = cap))
+    kernels.foreach { run =>
+      val capped = run(8).as[(Long, Long)].collect().toMap
+      // the pair OUTSIDE the hot bucket survives the cap
+      capped.get(1L) shouldBe Some(0L)
+      // the hot bucket is dropped whole (stop-key rule): no dup rows from it
+      capped.keySet.intersect((10L to 29L).toSet) shouldBe Set.empty
+      // and it is the CAP that excluded it, not the verifier
+      val uncapped = run(100).as[(Long, Long)].collect().toMap
+      uncapped.keySet.intersect((10L to 29L).toSet) shouldBe (11L to 29L).toSet
+      uncapped.get(1L) shouldBe Some(0L)
+    }
+  }
+
   test("portable md5 twins find the same planted dups as the production family") {
     import graft.ops.Portable
     val mh = Portable.nearDupMd5(spark, docs(), "doc_id",
