@@ -23,7 +23,11 @@ import graft.ops.{Blocking, Clustering, Extract, Metrics, Scoring, Training}
   *
   * No Iceberg jars ship in this sandbox (SURVEY.md §7.4), so the commit
   * protocol is parquet-directory + _SUCCESS (Spark's atomic job commit); the
-  * writer is confined to this object so an Iceberg catalog can be slotted in.
+  * writer is confined to graft.StateTables so an Iceberg catalog can be
+  * slotted in. Stage tables are zstd parquet and keep only what a reader
+  * needs: s0 stores `html_hash` = xxhash64(html), not the raw html (the
+  * invariant proves `text` equal to its extraction), and s2/s2_overflow are
+  * keyed by the numeric `block_id`, not the band-key string.
   */
 case class PipelineConfig(
     checkpointDir: String,
@@ -120,11 +124,15 @@ object Pipeline {
       spark.read.parquet(path)
     } else {
       val t0 = System.nanoTime()
-      compute.write.mode("overwrite").parquet(path)
+      StateTables.write(compute, path, "overwrite")
       val out = spark.read.parquet(path)
       val wallMs = (System.nanoTime() - t0) / 1000000L
+      // the committed bytes ride the stage's one metrics append as a
+      // "<stage>/write_bytes" counter row
       val write = Future {
         Metrics.stageMetrics(out, cfg.runId, name, wallMs)
+          .unionByName(Metrics.countMetric(spark, cfg.runId, name,
+            "write_bytes" -> StateTables.dataBytes(out)))
           .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
       }(metricsEc)
       if (pending != null) pending += write

@@ -184,21 +184,36 @@ case class ContextCosineExpr(left: Expression, right: Expression, dim: Int,
   * term of the embedding near-dup bucketing pass).
   */
 object SignBucket {
+  /** The ±1 pattern depends only on (nPlanes, seed, dim), so it is hashed
+    * once per key (plane-major, dim entries per plane), not per row. */
+  private val signTables =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Long, Int), Array[Double]]()
+
+  private def signs(nPlanes: Int, seed: Long, dim: Int): Array[Double] =
+    signTables.computeIfAbsent((nPlanes, seed, dim), _ => {
+      import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+      import org.apache.spark.sql.types.{IntegerType, LongType}
+      val t = new Array[Double](nPlanes * dim)
+      val h0 = XxHash64Function.hash(seed, LongType, 42L)
+      for (p <- 0 until nPlanes; i <- 0 until dim) {
+        val h = XxHash64Function.hash(i, IntegerType,
+          XxHash64Function.hash(p, IntegerType, h0))
+        t(p * dim + i) = if (((h % 2) + 2) % 2 == 0) 1.0 else -1.0
+      }
+      t
+    })
+
   def bucket(vec: ArrayData, nPlanes: Int, seed: Long): Int = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     val n = vec.numElements()
+    val t = signs(nPlanes, seed, n)
     var out = 0
     var p = 0
     while (p < nPlanes) {
       var dot = 0.0
       var i = 0
+      val off = p * n
       while (i < n) {
-        var h = XxHash64Function.hash(seed, LongType, 42L)
-        h = XxHash64Function.hash(p, IntegerType, h)
-        h = XxHash64Function.hash(i, IntegerType, h)
-        val sign = if (((h % 2) + 2) % 2 == 0) 1.0 else -1.0
-        dot += vec.getFloat(i).toDouble * sign
+        dot += vec.getFloat(i).toDouble * t(off + i)
         i += 1
       }
       if (dot > 0) out |= (1 << p)

@@ -24,11 +24,14 @@ import graft.functions.{lsh_band_keys, minhash_sig}
   * Scale design:
   *  - the dict join broadcasts (dict is ontology-sized, ~4k rows in the
   *    reference);
-  *  - blocks and candidate pairs carry ONLY (block_key, mention_id, url):
-  *    a pair sharing 16 LSH bands materializes 16 duplicate rows before
-  *    dedup, so row width dominates shuffle volume — payloads (surface, ctx)
-  *    are hydrated back by Scoring AFTER the pair dedup (late
-  *    materialization);
+  *  - blocks and candidate pairs carry ONLY (block_id, mention_id, url),
+  *    block_id = xxhash64 of the block-key string: a pair sharing 16 LSH
+  *    bands materializes 16 duplicate rows before dedup, so row width
+  *    dominates shuffle volume — payloads (surface, ctx) are hydrated back
+  *    by Scoring AFTER the pair dedup (late materialization). The key
+  *    string is hashed where it is made and never shuffled or committed; a
+  *    rare 64-bit collision only merges two blocks' candidates, which the
+  *    scorer re-separates;
   *  - pair generation is THE shuffle-heavy operator (SURVEY.md J7); blocks
   *    between `saltThreshold` and `maxBlock` use a salted self-join so one
   *    hot key spreads over `nSalts` shuffle partitions.
@@ -60,8 +63,24 @@ object Blocking {
         LshBands, LshRows)).as("block_key"),
       col("mention_id"), col("url"))
 
+  /** Every block a mention falls in, as (block_id, mention_id, url):
+    * dictionary and LSH blocks, block_id = xxhash64(block_key). */
   def allBlocks(mentions: DataFrame, dict: DataFrame, seed: Long = 42L): DataFrame =
     dictBlocks(mentions, dict).unionByName(lshBlocks(mentions, seed))
+      .select(xxhash64(col("block_key")).as("block_id"), col("mention_id"),
+        col("url"))
+
+  /** The cap's deterministic rank inside a block: content-derived from the
+    * block id and the mention id alone, so attach can recompute it from the
+    * committed s2 columns. */
+  private def capRank = org.apache.spark.sql.expressions.Window
+    .partitionBy(col("block_id"))
+    .orderBy(xxhash64(col("block_id"), col("mention_id")).asc,
+      col("mention_id").asc)
+
+  private def withBlockSize(blocks: DataFrame): DataFrame =
+    blocks.join(blocks.groupBy("block_id").agg(count(lit(1)).as("block_size")),
+      Seq("block_id"))
 
   /** Cap blocks at maxBlock mentions (stop-key rule, graceful form) and
     * attach block_size (the TRUE pre-cap size — it is the prevalence signal
@@ -76,23 +95,17 @@ object Blocking {
     * before the shuffle). pairs(capped) ⊆ pairs(uncapped) by construction
     * (BlockingSpec property test).
     *
-    * Cost shape: the size aggregation shuffles only (block_key, count)
+    * Cost shape: the size aggregation shuffles only (block_id, count)
     * partials; cold blocks (the overwhelming majority) take the join-only
     * path with NO row shuffle (sizes broadcast); only rows of oversized
     * blocks — bounded by the skew tail — pay the window sort. The input is
     * read by three consumers (sizes agg + cold + hot), so callers on an
     * expensive input should persist it (blocks() does). */
   def capBlocks(blocks: DataFrame, maxBlock: Int): DataFrame = {
-    val sizes = blocks.groupBy("block_key")
-      .agg(count(lit(1)).as("block_size"))
-    val withSize = blocks.join(sizes, Seq("block_key"))
+    val withSize = withBlockSize(blocks)
     val cold = withSize.filter(col("block_size") <= maxBlock)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("block_key"))
-      .orderBy(xxhash64(col("block_key"), col("mention_id")).asc,
-        col("mention_id").asc)
     val hot = withSize.filter(col("block_size") > maxBlock)
-      .withColumn("__rk", row_number().over(w))
+      .withColumn("__rk", row_number().over(capRank))
       .filter(col("__rk") <= maxBlock)
       .drop("__rk")
     cold.unionByName(hot)
@@ -106,19 +119,12 @@ object Blocking {
     * full raw membership. Persisted as stage s2_overflow when
     * `PipelineConfig.keepBlockOverflow`; its size is exactly
     * `cappedDropCount` rows (the skew tail), not O(corpus). */
-  def capBlocksOverflow(blocks: DataFrame, maxBlock: Int): DataFrame = {
-    val sizes = blocks.groupBy("block_key")
-      .agg(count(lit(1)).as("block_size"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("block_key"))
-      .orderBy(xxhash64(col("block_key"), col("mention_id")).asc,
-        col("mention_id").asc)
-    blocks.join(sizes, Seq("block_key"))
+  def capBlocksOverflow(blocks: DataFrame, maxBlock: Int): DataFrame =
+    withBlockSize(blocks)
       .filter(col("block_size") > maxBlock)
-      .withColumn("__rk", row_number().over(w))
+      .withColumn("__rk", row_number().over(capRank))
       .filter(col("__rk") > maxBlock)
       .drop("__rk")
-  }
 
   /** Mentions dropped by the rank cap, from a CAPPED blocks table alone:
     * block_size is the true pre-cap size, so dropped = Σ max(0, size - cap)
@@ -126,18 +132,17 @@ object Blocking {
     * uncapped table. Feed into the metrics/lineage table (no silent
     * truncation: the cap is the pipeline's most important drop point). */
   def cappedDropCount(cappedBlocks: DataFrame, maxBlock: Int): Long =
-    cappedBlocks.select(col("block_key"), col("block_size")).distinct()
+    cappedBlocks.select(col("block_id"), col("block_size")).distinct()
       .agg(coalesce(sum(greatest(col("block_size") - maxBlock, lit(0))),
         lit(0L)).as("dropped"))
       .head().getLong(0)
 
-  /** Capped blocks table — the blocking stage's materialization point
-    * (Pipeline checkpoints it; the self-join reads it several times).
-    * block_id = xxhash64(block_key): pair generation joins and dedups on the
-    * NUMERIC id — string min/first aggregates force SortAggregate (string agg
-    * buffers cannot hash-aggregate), which sorted the entire pre-dedup pair
-    * set; a rare 64-bit collision only merges two blocks' candidates, which
-    * the scorer re-separates.
+  /** Capped blocks table (block_id, mention_id, url, block_size) — the
+    * blocking stage's materialization point (Pipeline checkpoints it; the
+    * self-join reads it several times). Pair generation joins and dedups on
+    * the NUMERIC block_id — string min/first aggregates force SortAggregate
+    * (string agg buffers cannot hash-aggregate), which sorted the entire
+    * pre-dedup pair set.
     *
     * The UNCAPPED block table is always cached here: capBlocks reads it three
     * times (size agg + cold + hot branches) and it holds the expensive LSH
@@ -149,7 +154,6 @@ object Blocking {
     val raw = allBlocks(mentions, dict, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val b = capBlocks(raw, maxBlock)
-      .withColumn("block_id", xxhash64(col("block_key")))
     if (persistCapped) {
       val bp = b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (bp, () => { bp.unpersist(); raw.unpersist(); () })
@@ -163,21 +167,18 @@ object Blocking {
     blocksManaged(mentions, dict, maxBlock, seed, persistCapped = persist)._1
 
   /** Candidate pairs within each block, url_a < url_b, exactly once per
-    * (block_key, mention pair). Blocks with block_size > saltThreshold go
+    * (block_id, mention pair). Blocks with block_size > saltThreshold go
     * through a salted self-join: the left side gets salt = hash(url) % nSalts,
     * the right side is replicated nSalts times, and the join key is
-    * (block_key, salt) — every pair appears exactly once (when the replica's
+    * (block_id, salt) — every pair appears exactly once (when the replica's
     * salt equals the left row's salt) while the hot key spreads over nSalts
     * shuffle partitions (SURVEY.md §4.2.1; property-tested:
     * pairs(salted) == pairs(plain)).
     */
   def candidatePairs(cappedBlocks: DataFrame, saltThreshold: Int = 64,
       nSalts: Int = 16): DataFrame = {
-    val withId =
-      if (cappedBlocks.columns.contains("block_id")) cappedBlocks
-      else cappedBlocks.withColumn("block_id", xxhash64(col("block_key")))
-    val cold = withId.filter(col("block_size") <= saltThreshold)
-    val hot = withId.filter(col("block_size") > saltThreshold)
+    val cold = cappedBlocks.filter(col("block_size") <= saltThreshold)
+    val hot = cappedBlocks.filter(col("block_size") > saltThreshold)
 
     def pairUp(a: DataFrame, b: DataFrame, extraKey: Seq[String]): DataFrame = {
       val la = a.select((Seq(col("block_id")) ++ extraKey.map(col) ++ Seq(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.StateTables
+
 /** Transitive clustering: connected components over the match-edge graph via
   * iterative large-star / small-star (Kiveris et al., "Connected Components
   * in MapReduce and Beyond", SOCC'14 — public algorithm), expressed entirely
@@ -248,7 +250,7 @@ object Clustering {
       val cut = checkpointDir match {
         case Some(dir) =>
           val path = s"$dir/cc_round_$round"
-          next.write.mode("overwrite").parquet(path)
+          StateTables.write(next, path, "overwrite")
           // the PREVIOUS cut fed this write and is never read again (no
           // mid-loop resume is implemented; the caller reads only the FINAL
           // cut) — delete it once the new cut's write has committed. At

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.StateTables
 import graft.functions._
 
 /** Deduplication family for the training-data pipeline over
@@ -281,9 +282,9 @@ object Dedup {
 
   /** Parquet round-trip for the committed state. */
   def commitDedupState(state: MinhashDedupState, dir: String): Unit = {
-    state.keyed.write.mode("overwrite").parquet(s"$dir/keyed")
-    state.edges.write.mode("overwrite").parquet(s"$dir/edges")
-    state.assign.write.mode("overwrite").parquet(s"$dir/assign")
+    StateTables.write(state.keyed, s"$dir/keyed", "overwrite")
+    StateTables.write(state.edges, s"$dir/edges", "overwrite")
+    StateTables.write(state.assign, s"$dir/assign", "overwrite")
   }
 
   def dedupStateFromDir(spark: SparkSession, dir: String): MinhashDedupState =

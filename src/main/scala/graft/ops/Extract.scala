@@ -56,13 +56,21 @@ object Extract {
   def canonicalized(pages: DataFrame): DataFrame =
     pages.withColumn("url", canonicalUrl(col("url")))
 
-  /** Keep the latest snapshot per url (warc_ts desc, html hash as a
+  /** `html_hash` = xxhash64(html): the snapshot tiebreak, and the identity
+    * attach's dirty check compares (extraction, mentions and blocking are
+    * deterministic in the html). Added once; rows that already carry it
+    * (committed s0 rows, which no longer hold the html) keep theirs. */
+  private def withHtmlHash(pages: DataFrame): DataFrame =
+    if (pages.columns.contains("html_hash")) pages
+    else pages.withColumn("html_hash", xxhash64(col("html")))
+
+  /** Keep the latest snapshot per url (warc_ts desc, html_hash as a
     * deterministic tiebreak). SURVEY.md §2.10: warc_ts is a plain timestamp,
     * not a watermark. */
   def latestSnapshot(pages: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("url"))
-      .orderBy(col("warc_ts").desc, xxhash64(col("html")).asc)
-    pages.withColumn("__rn", row_number().over(w))
+      .orderBy(col("warc_ts").desc, col("html_hash").asc)
+    withHtmlHash(pages).withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
@@ -72,17 +80,23 @@ object Extract {
     regexp_extract(html.cast("string"), "<p>(.*)</p>", 1)
 
   /** Per-row invariant (P14): extracted text must be byte-identical to the
-    * `text` column. Returns pages + boolean `invariant_ok`; violations are
-    * counted into the metrics table by the pipeline, never thrown per-row
+    * `text` column. Returns pages + boolean `invariant_ok` + `html_hash`,
+    * with the raw `html` dropped: on an invariant_ok row `text` IS the
+    * extraction, so nothing downstream reads the html again, and the s0
+    * table it becomes stores an 8-byte hash instead. Violations are counted
+    * into the metrics table by the pipeline, never thrown per-row
     * (reference tolerates and records bad rows rather than failing,
     * `main_scripts/step0_mimic3_data_processing.py:249-253`). */
   def withInvariant(pages: DataFrame): DataFrame =
-    pages.withColumn("invariant_ok",
+    withHtmlHash(pages).withColumn("invariant_ok",
       sha2(extractedText(col("html")).cast("binary"), 256) ===
         sha2(col("text").cast("binary"), 256))
+      .drop("html")
 
-  /** Mention extraction: maximal runs of Capitalized tokens in the extracted
-    * text of English pages. Output: (url, surface, begin, end, ctx).
+  /** Mention extraction: maximal runs of Capitalized tokens in the text of
+    * English pages that pass the invariant — there `text` equals the
+    * html's extraction byte for byte, so it is read as is.
+    * Output: (url, surface, begin, end, ctx).
     * ctx = ±`ctxWindow` tokens around the mention (reference context window,
     * `main_scripts/sent_bert_emb_viz_util.py:205-262`).
     *
@@ -96,7 +110,6 @@ object Extract {
     val mentionRe = "[A-Z][A-Za-z0-9]*(?: [A-Z][A-Za-z0-9]*)*"
     pages
       .filter(col("lang") === "en" && col("invariant_ok"))
-      .select(col("url"), extractedText(col("html")).as("text"))
       .select(col("url"), col("text"),
         explode(regexp_match_pos(col("text"), mentionRe)).as("m"))
       .select(col("url"), col("text"),

@@ -4,7 +4,7 @@ import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.PipelineConfig
+import graft.{PipelineConfig, StateTables}
 
 /** Incremental entity resolution: attach a DELTA batch of pages to the
   * committed state of a previous full run, recomputing only what the delta
@@ -46,10 +46,11 @@ import graft.PipelineConfig
   *    near-dup attach/detach (ops/DeltaDedup) runs too.
   *
   * Scale shape: every shuffle is delta-proportional. Base state is read as
-  * scans with broadcast semi-join pruning (touched keys against s2/s2_overflow,
-  * affected mention ids against s3, affected urls against s4/s5) — at
-  * deployment scale those indexes would be bucketed by key so the scans
-  * become partition-pruned reads; nothing here shuffles an O(base) table.
+  * scans with broadcast semi-join pruning (touched block ids against
+  * s2/s2_overflow, affected mention ids against s3, affected urls against
+  * s4/s5) — at deployment scale those indexes would be bucketed by key so
+  * the scans become partition-pruned reads; nothing here shuffles an
+  * O(base) table.
   *
   * Reference analogue: the memoized precompute-once pattern of
   * `main_scripts/step9_processing_all_documents.py:146-159` (dimension maps
@@ -106,7 +107,7 @@ object Incremental {
       pairs: DataFrame,
       /** (url) urls whose winning snapshot changed or is new. */
       dirtyUrls: DataFrame,
-      /** (block_key) blocks whose membership can have changed. */
+      /** (block_id) blocks whose membership can have changed. */
       touchedKeys: DataFrame,
       /** Rescored url-pair rows (the work the delta actually caused). */
       rescored: DataFrame,
@@ -130,25 +131,26 @@ object Incremental {
 
     // ---- s0: merged snapshot winners for urls the delta mentions ----------
     // deltaUrls and the merged-winner window are independent given the raw
-    // delta (both derive the url set inline) — one overlapped barrier
+    // delta (both derive the url set inline) — one overlapped barrier. Base
+    // rows keep their committed invariant_ok and html_hash (s0 holds no
+    // html); only delta rows compute them.
     val deltaCanon = Extract.canonicalized(deltaPagesIn)
     val deltaUrlsF = PlanCut.async("er_deltaUrls")(deltaCanon.select("url").distinct())
     val mergedTouchedPagesF = PlanCut.async("er_mergedTouchedPages")(
-      Extract.withInvariant(Extract.latestSnapshot(
-        base.pages.drop("invariant_ok")
-          .join(broadcast(deltaCanon.select("url").distinct()), Seq("url"), "left_semi")
-          .unionByName(deltaCanon))))
+      Extract.latestSnapshot(base.pages
+        .join(broadcast(deltaCanon.select("url").distinct()), Seq("url"), "left_semi")
+        .unionByName(Extract.withInvariant(deltaCanon))))
     val deltaUrls = PlanCut.await(deltaUrlsF)
     val mergedTouchedPages = PlanCut.await(mergedTouchedPagesF)
 
     // dirty = new url, or an existing url whose winning snapshot changed
-    // (html hash is the identity that matters: extraction, mentions and
+    // (html_hash is the identity that matters: extraction, mentions and
     // blocking are deterministic in the html payload)
     val baseWinner = base.pages
       .join(broadcast(deltaUrls), Seq("url"), "left_semi")
-      .select(col("url"), xxhash64(col("html")).as("h0"))
+      .select(col("url"), col("html_hash").as("h0"))
     val dirtyUrls = mergedTouchedPages
-      .select(col("url"), xxhash64(col("html")).as("h1"))
+      .select(col("url"), col("html_hash").as("h1"))
       .join(broadcast(baseWinner), Seq("url"), "left_outer")
       .filter(col("h0").isNull || col("h0") =!= col("h1"))
       .select("url")
@@ -159,43 +161,42 @@ object Incremental {
     val oldDirtyMentions = base.mentions.join(broadcast(dirtyUrls), Seq("url"), "left_semi")
 
     // ---- s2: touched blocks -----------------------------------------------
-    // every block key a dirty mention enters (new membership) or leaves (old
-    // membership) — block keys are deterministic in mention content, so no
+    // every block a dirty mention enters (new membership) or leaves (old
+    // membership) — block ids are deterministic in mention content, so no
     // other block's membership can differ from the base run's. The OLD-side
     // key set (a scan of base mentions) materializes concurrently with the
     // new-side extract -> block chain.
     val oldDirtyKeysF = PlanCut.async("er_oldDirtyKeys")(
       Blocking.allBlocks(oldDirtyMentions, dict, cfg.seed)
-        .select("block_key").distinct())
+        .select("block_id").distinct())
     val newDirtyMentions = PlanCut("er_newDirtyMentions")(
       Extract.mentions(dirtyPages, cfg.ctxWindow))
     val newDirtyBlocks = PlanCut("er_newDirtyBlocks")(
       Blocking.allBlocks(newDirtyMentions, dict, cfg.seed))
-    val touchedKeys = newDirtyBlocks.select("block_key")
+    val touchedKeys = newDirtyBlocks.select("block_id")
       .union(PlanCut.await(oldDirtyKeysF))
       .distinct()
       .pipe(PlanCut("er_touchedKeys"))
 
     // raw (uncapped) base membership of touched blocks: capped rows plus the
     // committed overflow, so cap re-entry on shrinking blocks is exact
-    val baseRawTouched = base.blocks.select("block_key", "mention_id", "url")
-      .unionByName(base.blockOverflow.get.select("block_key", "mention_id", "url"))
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_semi")
+    val baseRawTouched = base.blocks.select("block_id", "mention_id", "url")
+      .unionByName(base.blockOverflow.get.select("block_id", "mention_id", "url"))
+      .join(broadcast(touchedKeys), Seq("block_id"), "left_semi")
 
     // merged membership: base minus ALL dirty urls' old mentions, plus dirty
     // new mentions; the content-hash rank cap then reproduces the batch cap.
     // The old-membership scan (oldTouchedBlocks) is independent of the
     // merge+recap chain — overlapped.
     val oldTouchedBlocksF = PlanCut.async("er_oldTouchedBlocks")(base.blocks
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_semi")
-      .select(col("block_key"), col("mention_id"), col("url"),
-        xxhash64(col("block_key")).as("block_id")))
+      .join(broadcast(touchedKeys), Seq("block_id"), "left_semi")
+      .select("block_id", "mention_id", "url"))
     val mergedRawTouched = baseRawTouched
       .join(broadcast(dirtyUrls), Seq("url"), "left_anti")
-      .unionByName(newDirtyBlocks.select("block_key", "mention_id", "url"))
+      .unionByName(newDirtyBlocks)
       .pipe(PlanCut("er_mergedRawTouched"))
     val newTouchedBlocks = PlanCut("er_newTouchedBlocks")(
-      Blocking.capBlocks(mergedRawTouched, cfg.maxBlock).withColumn("block_id", xxhash64(col("block_key"))))
+      Blocking.capBlocks(mergedRawTouched, cfg.maxBlock))
     // materialized once: consumed by the leaver/entrant diff, the co-member
     // expansion and the old-contribution join — without the checkpoint each
     // consumer re-scans the full s2_blocks table
@@ -218,9 +219,8 @@ object Incremental {
     // or the min-block-id tiebreak moved, or a payload changed); everything
     // else regenerates bit-identically and is NOT rescored. Changed pairs =
     // D × co-members — Σ|D_b|·|members_b|, delta-proportional.
-    // id-keyed projections: the diff and every generation join below key on
-    // the numeric block_id (the id the committed s3 rows carry and the batch
-    // self-join pairs on) — band-key strings never enter these shuffles
+    // the diff and every generation join below key on the numeric block_id
+    // (the id the committed s2/s3 rows carry and the batch self-join pairs on)
     val oldCapM = oldTouchedBlocks
       .select("block_id", "mention_id", "url")
     val newCapM = newTouchedBlocks
@@ -236,9 +236,6 @@ object Incremental {
 
     // candidate mention pairs POSSIBLY changed (D × co-members within a
     // shared touched block), oriented like production pair-gen (url_a<url_b).
-    // Joined on the NUMERIC block_id, exactly like the production pair self-
-    // join (Blocking.candidatePairs keys on block_id, not block_key): narrow
-    // long keys instead of band-key strings through the expansion shuffle.
     // no distinct here: mpRaw dedups its own output, and duplicate membership
     // rows (present in both caps) cannot change the pair set — saves a shuffle
     val coMembers = oldCapM.unionByName(newCapM)
@@ -271,8 +268,8 @@ object Incremental {
       .union(mpKeys.select(col("mid_b").as("mention_id"))).distinct()
     val blocksOfChangedF = PlanCut.async("er_blocksOfChanged")(base.blocks
       .join(broadcast(midsChanged), Seq("mention_id"), "left_semi")
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
-      .select(col("mention_id"), xxhash64(col("block_key")).as("block_id")))
+      .join(broadcast(touchedKeys), Seq("block_id"), "left_anti")
+      .select("mention_id", "block_id"))
     def coGen(members: DataFrame, out: String) = broadcast(mpKeys)
       .join(members.select(col("mention_id").as("mid_a"), col("block_id")),
         Seq("mid_a"))
@@ -442,10 +439,10 @@ object Incremental {
     // changed pairs get their recomputed min generating block id
     val baseCols = base.blocks.columns.toSeq
     val blocksMerged = base.blocks
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
+      .join(broadcast(touchedKeys), Seq("block_id"), "left_anti")
       .unionByName(newTouchedBlocks.select(baseCols.head, baseCols.tail: _*))
     val overflowMerged = base.blockOverflow.map { o =>
-      o.join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
+      o.join(broadcast(touchedKeys), Seq("block_id"), "left_anti")
         .unionByName(
           Blocking.capBlocksOverflow(mergedRawTouched, cfg.maxBlock)
             .select(o.columns.head, o.columns.tail: _*))
@@ -470,9 +467,12 @@ object Incremental {
     * re-cap — including cap re-entry from s2_overflow — and its components
     * dissolve and re-solve without it), so the ENTIRE proven attach algebra
     * carries the delete; the only residue is the tombstone row in the merged
-    * s0 view, which this wrapper drops for true erasure (the url, html and
-    * text appear in NO committed table afterwards). IncrementalSpec pins
-    * detach == a full batch over the remaining pages, stage tables included.
+    * s0 view, which this wrapper drops for true erasure: the deleted url and
+    * its text appear in NO committed table afterwards, and no committed
+    * table holds raw html at all (s0 stores only html_hash). The tombstone
+    * still enters as a raw page, html included, like any delta row.
+    * IncrementalSpec pins detach == a full batch over the remaining pages,
+    * stage tables included.
     *
     * `deletedUrls` is one `url` column of CANONICAL urls (as committed in
     * the base state); urls absent from the base are no-ops. */
@@ -497,13 +497,14 @@ object Incremental {
     require(res.blockOverflow.isDefined,
       "chaining requires a base built with keepBlockOverflow=true " +
         "(exact cap re-entry on the next attach needs the overflow rows)")
-    res.pages.write.mode("error").parquet(s"$dir/s0_pages")
-    res.mentions.write.mode("error").parquet(s"$dir/s1_mentions")
-    res.blocks.write.mode("error").parquet(s"$dir/s2_blocks")
-    res.blockOverflow.foreach(
-      _.write.mode("error").parquet(s"$dir/s2_overflow"))
-    res.pairs.write.mode("error").parquet(s"$dir/s3_pairs")
-    res.scored.write.mode("error").parquet(s"$dir/s4_scored")
-    res.clusters.write.mode("error").parquet(s"$dir/s5_clusters")
+    def commit(df: DataFrame, stage: String) =
+      StateTables.write(df, s"$dir/$stage", "error")
+    commit(res.pages, "s0_pages")
+    commit(res.mentions, "s1_mentions")
+    commit(res.blocks, "s2_blocks")
+    res.blockOverflow.foreach(commit(_, "s2_overflow"))
+    commit(res.pairs, "s3_pairs")
+    commit(res.scored, "s4_scored")
+    commit(res.clusters, "s5_clusters")
   }
 }

@@ -45,6 +45,7 @@ class BlockingSpec extends SparkSpec {
   test("block cap keeps top-k of oversized blocks (graceful stop-key rule)") {
     val blocks = ((1 to 10).map(i => ("big", s"u$i")) ++ Seq(("small", "u1"), ("small", "u2")))
       .toDF("block_key", "url")
+      .withColumn("block_id", xxhash64(col("block_key")))
       .withColumn("mention_id", xxhash64(col("url")))
     val capped = Blocking.capBlocks(blocks, maxBlock = 5)
     // round-2 semantics dropped "big" whole; the ranked cap keeps exactly
@@ -67,6 +68,7 @@ class BlockingSpec extends SparkSpec {
     val blocks = ((1 to 12).map(i => ("hot", f"h$i%02d")) ++
       (1 to 4).map(i => ("cold", f"c$i%02d")))
       .toDF("block_key", "url")
+      .withColumn("block_id", xxhash64(col("block_key")))
       .withColumn("mention_id", xxhash64(col("url")))
     def pairsOf(maxBlock: Int) =
       Blocking.candidatePairs(Blocking.capBlocks(blocks, maxBlock))
@@ -83,6 +85,7 @@ class BlockingSpec extends SparkSpec {
     val blocks = ((1 to 30).map(i => ("hot", f"u$i%02d")) ++
       (1 to 5).map(i => ("cold", f"c$i%02d")))
       .toDF("block_key", "url")
+      .withColumn("block_id", xxhash64(col("block_key")))
       .withColumn("mention_id", xxhash64(col("url")))
       .withColumn("block_size",
         when(col("block_key") === "hot", 30).otherwise(5))

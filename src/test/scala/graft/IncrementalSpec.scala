@@ -82,17 +82,22 @@ class IncrementalSpec extends SparkSpec {
     df.filter(col("is_match")).select("url_a", "url_b")
       .as[(String, String)].collect().toSet
 
-  private def runCase(p: SynthParams, cfg0: PipelineConfig): Unit = {
+  private def runCase(p: SynthParams, cfg0: PipelineConfig)
+      : (Incremental.AttachResult, Incremental.BaseState) = {
     val all = Synth.pages(spark, p).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (baseInput, deltaInput) = split(all)
-    runSplit(p, cfg0, all, baseInput, deltaInput)
-    ()
+    val (res, _, base) = runSplit(p, cfg0, all, baseInput, deltaInput)
+    (res, base)
   }
+
+  /** Distinct blocks whose true size crosses the cap. */
+  private def blocksOverCap(blocks: DataFrame, maxBlock: Int): Long =
+    blocks.filter(col("block_size") > maxBlock).select("block_id").distinct().count()
 
   private def runSplit(p: SynthParams, cfg0: PipelineConfig, all: DataFrame,
       baseInput: DataFrame, deltaInput: DataFrame)
-      : (Incremental.AttachResult, PipelineResult) = {
+      : (Incremental.AttachResult, PipelineResult, Incremental.BaseState) = {
     val dict = Synth.dict(spark, p).toDF()
 
     val fullCfg = cfg0.copy(checkpointDir = freshDir(), runId = "full")
@@ -114,13 +119,13 @@ class IncrementalSpec extends SparkSpec {
       full.scored.select(key.head, key.tail: _*).as[(String, String, Long,
         Long, Double, Boolean)].collect().toSet
     // merged s0 equals the batch winner set byte-for-byte
-    res.pages.select(col("url"), col("warc_ts"), xxhash64(col("html")).as("h"))
+    res.pages.select(col("url"), col("warc_ts"), col("html_hash"))
       .as[(String, Timestamp, Long)].collect().toSet shouldBe
-      full.pages.select(col("url"), col("warc_ts"), xxhash64(col("html")).as("h"))
+      full.pages.select(col("url"), col("warc_ts"), col("html_hash"))
         .as[(String, Timestamp, Long)].collect().toSet
 
     all.unpersist()
-    (res, full)
+    (res, full, base)
   }
 
   test("attach == full recompute (default blocking config)") {
@@ -131,9 +136,16 @@ class IncrementalSpec extends SparkSpec {
   test("attach == full recompute under hot blocks, salting and cap re-entry") {
     // tiny cap + salt threshold force hot blocks (overflow non-empty), the
     // salted pair path, and cap re-entry when kills/moves shrink a hot block
-    runCase(SynthParams(nPages = 1200, nEntities = 40),
+    val (res, base) = runCase(SynthParams(nPages = 1200, nEntities = 40),
       PipelineConfig(checkpointDir = "unused", maxBlock = 16,
         saltThreshold = 8, nSalts = 4))
+    // the cap must bind on both sides of the attach, or this case tests no
+    // re-entry at all
+    val (before, after) = (blocksOverCap(base.blocks, 16), blocksOverCap(res.blocks, 16))
+    info(s"blocks over the cap: base $before, merged $after")
+    before should be > 0L
+    after should be > 0L
+    base.blockOverflow.get.count() should be > 0L
   }
 
   test("attach work is delta-proportional on a sparse corpus") {
@@ -147,7 +159,7 @@ class IncrementalSpec extends SparkSpec {
     val all = Synth.pages(spark, p).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hv = pmod(xxhash64(col("url")), lit(20))
-    val (res, full) = runSplit(p, PipelineConfig(checkpointDir = "unused"),
+    val (res, full, _) = runSplit(p, PipelineConfig(checkpointDir = "unused"),
       all, all.filter(hv =!= 0), all.filter(hv === 0))
 
     // measured on this fixture: ~11% rescored, ~10% dissolved at a ~5%
@@ -204,10 +216,10 @@ class IncrementalSpec extends SparkSpec {
     val chained = Incremental.stateFromCheckpoint(spark, dir1)
     def rows(df: DataFrame, cs: String*): Set[Seq[Any]] =
       df.select(cs.head, cs.tail: _*).collect().map(_.toSeq).toSet
-    val bc = Seq("block_key", "mention_id", "url", "block_size", "block_id")
+    val bc = Seq("block_id", "mention_id", "url", "block_size")
     rows(chained.blocks, bc: _*) shouldBe rows(mid.blocks, bc: _*)
-    rows(chained.blockOverflow.get, bc.init: _*) shouldBe
-      rows(mid.blockOverflow.get, bc.init: _*)
+    rows(chained.blockOverflow.get, bc: _*) shouldBe
+      rows(mid.blockOverflow.get, bc: _*)
     rows(chained.pairs, "mid_a", "mid_b", "block_id") shouldBe
       rows(mid.pairs, "mid_a", "mid_b", "block_id")
     all.unpersist()
@@ -291,10 +303,41 @@ class IncrementalSpec extends SparkSpec {
     res.pages.join(deleted, Seq("url"), "left_semi").count() shouldBe 0L
     res.mentions.join(deleted, Seq("url"), "left_semi").count() shouldBe 0L
     res.clusters.join(deleted, Seq("url"), "left_semi").count() shouldBe 0L
+    // and once committed, no table of the state holds raw html, a deleted
+    // url, or the text of a page that only deleted urls had
+    val dir = freshDir() + "/detached"
+    Incremental.commitAsBase(res, dir)
+    val st = Incremental.stateFromCheckpoint(spark, dir)
+    val tables = Seq("s0" -> st.pages, "s1" -> st.mentions, "s2" -> st.blocks,
+      "s2_overflow" -> st.blockOverflow.get, "s3" -> st.pairs,
+      "s4" -> st.scored, "s5" -> st.clusters)
+    tables.foreach { case (name, t) =>
+      withClue(s"$name columns ${t.columns.mkString(",")}: ") {
+        t.columns should not contain "html"
+      }
+    }
+    val urlCols = Seq(st.pages -> "url", st.mentions -> "url",
+      st.blocks -> "url", st.blockOverflow.get -> "url",
+      st.scored -> "url_a", st.scored -> "url_b",
+      st.clusters -> "url", st.clusters -> "cluster_id")
+    urlCols.foreach { case (t, c) =>
+      t.join(deleted.withColumnRenamed("url", c), Seq(c), "left_semi")
+        .count() shouldBe 0L
+    }
+    val deletedMids = base.mentions.join(deleted, Seq("url"), "left_semi")
+      .select("mention_id")
+    Seq("mid_a", "mid_b").foreach { c =>
+      st.pairs.join(deletedMids.withColumnRenamed("mention_id", c), Seq(c),
+        "left_semi").count() shouldBe 0L
+    }
+    val deletedOnlyTexts = all.filter(isDeleted).select("text")
+      .except(all.filter(!isDeleted).select("text"))
+    deletedOnlyTexts.count() should be > 0L
+    st.pages.join(deletedOnlyTexts, Seq("text"), "left_semi").count() shouldBe 0L
     // merged s0 equals the batch winner set byte-for-byte
-    res.pages.select(col("url"), xxhash64(col("html")).as("h"))
+    res.pages.select(col("url"), col("html_hash"))
       .as[(String, Long)].collect().toSet shouldBe
-      full.pages.select(col("url"), xxhash64(col("html")).as("h"))
+      full.pages.select(col("url"), col("html_hash"))
         .as[(String, Long)].collect().toSet
     all.unpersist()
     ()

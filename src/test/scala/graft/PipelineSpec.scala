@@ -86,11 +86,26 @@ class PipelineSpec extends SparkSpec {
     val cc = metrics.filter(col("stage").startsWith("s5_clusters/"))
       .select("stage", "rows").as[(String, Long)].collect().toMap
     cc.keySet shouldBe Set("s5_clusters/cc_local", "s5_clusters/cc_input_edges",
-      "s5_clusters/cc_est_bytes", "s5_clusters/cc_rounds")
+      "s5_clusters/cc_est_bytes", "s5_clusters/cc_rounds",
+      "s5_clusters/write_bytes")
     cc("s5_clusters/cc_local") shouldBe 1L
     cc("s5_clusters/cc_input_edges") should be > 0L
     cc("s5_clusters/cc_est_bytes") should be > cc("s5_clusters/cc_input_edges")
     cc("s5_clusters/cc_rounds") shouldBe 0L
+    // every committed stage records the bytes it wrote: one write_bytes row,
+    // equal to its parquet data files on disk
+    val written = metrics.filter(col("stage").endsWith("/write_bytes"))
+      .select("stage", "rows").as[(String, Long)].collect()
+    val stageNames = Seq("s0_pages", "s1_mentions", "s2_blocks", "s3_pairs",
+      "s4_scored", "s5_clusters")
+    written.map(_._1).sorted.toSeq shouldBe stageNames.map(_ + "/write_bytes")
+    written.foreach { case (stage, bytes) =>
+      val onDisk = Files.list(java.nio.file.Paths.get(dir, stage.stripSuffix("/write_bytes")))
+        .toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
+      withClue(stage) { bytes shouldBe onDisk }
+      bytes should be > 0L
+    }
   }
 
   test("fit stage commits a model artifact and resume reloads it unchanged") {
