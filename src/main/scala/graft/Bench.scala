@@ -47,7 +47,8 @@ object Bench {
 
     // untimed JIT/codegen warmup (JMH-style): g01 runs first and was paying
     // the whole session's codegen+JIT compilation inside its measured wall
-    // (~2x on the fixed-size fixture — tools/EntryAB cold-vs-warm). Disable
+    // (~2x on the fixed-size fixture, cold vs warm in an interleaved
+    // same-JVM A/B; BENCH/BASELINE.md round 3). Disable
     // with SPARK_GRAFT_BENCH_WARMUP=0. The setting is emitted in the JSON so
     // cross-round comparisons can tell warm from cold g01 numbers
     // (warm since round 3; rounds 1-2 measured cold).

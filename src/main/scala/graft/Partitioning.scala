@@ -7,10 +7,11 @@ package graft
   *    put ~700MB in each partition and went into multi-pass spill
   *    (24.6s -> 531s, round-2 measurement) — hence the 8x-cores ceiling;
   *  - too MANY for the data: the 800-page bench fixture (g01) runs 2.2x
-  *    SLOWER at 256 partitions than at 32 (tools/EntryAB, interleaved
-  *    same-JVM A/B) — a fixed-overhead-bound job pays per-task scheduling
-  *    and per-reducer shuffle bookkeeping on every one of its ~20 barriers,
-  *    and AQE's parallelism-first coalescing does not claw it all back.
+  *    SLOWER at 256 partitions than at 32 (interleaved same-JVM A/B,
+  *    BENCH/BASELINE.md round 3) — a fixed-overhead-bound job pays
+  *    per-task scheduling and per-reducer shuffle bookkeeping on every one
+  *    of its ~20 barriers, and AQE's parallelism-first coalescing does not
+  *    claw it all back.
   *
   * So the partition count scales with DATA between those bounds: ~1
   * partition per `pagesPerPartition` input pages, floored at the core count
@@ -20,9 +21,10 @@ package graft
   */
 object Partitioning {
   /** ~1 partition per 1k pages: 800-page fixture -> core count (floor),
-    * 50k bench pages -> ~50, 600k+ -> the 8x-cores ceiling (ScalingAB at
-    * 50k: 32 vs 256 partitions is within host noise, ±10%; the bounds are
-    * what matter). */
+    * 50k bench pages -> ~50, 600k+ -> the 8x-cores ceiling (at 50k, 32 vs
+    * 256 partitions measured within host noise, ±10%, in a round-2
+    * interleaved A/B; the bounds are what matter — BENCH/BASELINE.md
+    * rounds 2-3 record the measurements behind them). */
   def shufflePartitions(cores: Int, nPages: Long,
       pagesPerPartition: Long = 1000L): Int =
     math.max(cores.toLong,

@@ -112,10 +112,23 @@ object Pipeline {
       t
     })
 
+  /** Append lineage rows to <ckpt>/metrics on the metrics thread (`rows` is
+    * built there too). The write joins `pending`; without a buffer (a
+    * standalone `stage` call) it completes before this returns. */
+  private def appendMetrics(cfg: PipelineConfig,
+      pending: scala.collection.mutable.Buffer[Future[Unit]])
+      (rows: => DataFrame): Unit = {
+    val write = Future {
+      rows.write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
+    }(metricsEc)
+    if (pending != null) pending += write
+    else Await.result(write, Duration.Inf)
+  }
+
   /** Run one stage: resume from the last committed snapshot if present,
-    * otherwise compute, commit, and append lineage metrics (asynchronously —
-    * pass the returned future list to awaitMetrics, or use run(), which
-    * awaits before returning). */
+    * otherwise compute, commit, and append lineage metrics (asynchronously
+    * into `pending`, which run() awaits before returning; synchronously when
+    * no buffer is passed). */
   def stage(spark: SparkSession, cfg: PipelineConfig, name: String,
       pending: scala.collection.mutable.Buffer[Future[Unit]] = null)
       (compute: => DataFrame): DataFrame = {
@@ -129,14 +142,11 @@ object Pipeline {
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // the committed bytes ride the stage's one metrics append as a
       // "<stage>/write_bytes" counter row
-      val write = Future {
+      appendMetrics(cfg, pending) {
         Metrics.stageMetrics(out, cfg.runId, name, wallMs)
           .unionByName(Metrics.countMetric(spark, cfg.runId, name,
             "write_bytes" -> StateTables.dataBytes(out)))
-          .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
-      }(metricsEc)
-      if (pending != null) pending += write
-      else Await.result(write, Duration.Inf) // standalone call: synchronous
+      }
       out
     }
   }
@@ -187,12 +197,10 @@ object Pipeline {
     // true pre-cap size, so this is one cheap agg over the checkpoint)
     if (!s2Resumed) {
       val dropped = Blocking.cappedDropCount(blocks, cfg.maxBlock)
-      val write = Future {
+      appendMetrics(cfg, pending) {
         Metrics.countMetric(spark, cfg.runId, "s2_blocks",
-            "dropped_mentions" -> dropped)
-          .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
-      }(metricsEc)
-      pending += write
+          "dropped_mentions" -> dropped)
+      }
     }
 
     val pairs = stage(spark, cfg, "s3_pairs", pending) {
@@ -212,14 +220,12 @@ object Pipeline {
       // (counter rows: hydrate_broadcast=1/0 and hydrate_est_bytes)
       if (cfg.broadcastMentions.isEmpty) {
         val wallMs = (System.nanoTime() - t0) / 1000000L
-        val write = Future {
+        appendMetrics(cfg, pending) {
           Metrics.countMetric(spark, cfg.runId, "s4_scored",
               "hydrate_broadcast" -> (if (choice) 1L else 0L),
               "hydrate_est_bytes" -> bytes)
             .withColumn("wall_ms", lit(wallMs))
-            .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
-        }(metricsEc)
-        pending += write
+        }
       }
       choice
     }
@@ -260,14 +266,13 @@ object Pipeline {
     // and the loop's rounds to convergence (counter rows cc_local=1/0,
     // cc_input_edges, cc_est_bytes, cc_rounds)
     cc.foreach { d =>
-      pending += Future {
+      appendMetrics(cfg, pending) {
         Metrics.countMetric(spark, cfg.runId, "s5_clusters",
-            "cc_local" -> (if (d.local) 1L else 0L),
-            "cc_input_edges" -> d.inputEdges,
-            "cc_est_bytes" -> d.estBytes,
-            "cc_rounds" -> d.rounds.toLong)
-          .write.mode("append").parquet(s"${cfg.checkpointDir}/metrics")
-      }(metricsEc)
+          "cc_local" -> (if (d.local) 1L else 0L),
+          "cc_input_edges" -> d.inputEdges,
+          "cc_est_bytes" -> d.estBytes,
+          "cc_rounds" -> d.rounds.toLong)
+      }
     }
 
     // per-document taxonomy rollup (reference step9 admission-level agg):

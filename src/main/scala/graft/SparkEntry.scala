@@ -399,10 +399,8 @@ object SparkEntry {
       .select(col("doc_id"),
         TextOps.langIdHeuristic(col("text")).as("lang_pred"))),
 
-    // fingerprint = md5 of whitespace-normalized lowercase text: unlike the
-    // xxhash64 rolling fingerprint (still available as
-    // functions.doc_fingerprint for the pipeline), md5 exists in DuckDB, so
-    // this query is fully oracle-checked.
+    // fingerprint = md5 of whitespace-normalized lowercase text: md5 exists
+    // in DuckDB, so this query is fully oracle-checked.
     "g07_docs_fingerprint" -> ((s, d) =>
       TextOps.withFingerprintMd5(t(s, d, "documents"))
         .select("doc_id", "fingerprint")),

@@ -33,8 +33,6 @@ object HashUtil {
     }
     mix(h)
   }
-
-  def hashString(s: String, seed: Long): Long = hashChars(s, 0, s.length, seed)
 }
 
 /** MinHash signature over character k-shingles.

@@ -91,26 +91,6 @@ package object functions {
   def regexp_match_pos(text: Column, pattern: String): Column =
     e2col(RegexpMatchPosExpr(col2e(text.cast("string")), pattern))
 
-  /** ±w-token context window around the first occurrence of `surface` in
-    * `text`, as a single string (reference's context window,
-    * `main_scripts/sent_bert_emb_viz_util.py:205-262`). Token-level, built-ins
-    * only. Falls back to the whole text when the surface's first token is not
-    * found (array_position = 0). Prefer `context_window_at` when the
-    * occurrence's character offset is known — this variant mislocates
-    * repeated surfaces.
-    */
-  def context_window(text: Column, surface: Column, w: Int): Column = {
-    val tokens = split(text, "\\s+")
-    val sTokens = split(surface, "\\s+")
-    val idx = array_position(tokens, element_at(sTokens, 1))
-    when(idx === 0, text).otherwise(
-      array_join(
-        slice(tokens,
-          greatest(lit(1), (idx - w).cast("int")),
-          lit(2 * w) + size(sTokens)),
-        " "))
-  }
-
   /** ±w-token context window around the occurrence of `surface` that STARTS
     * at character offset `begin` (0-based) — per-occurrence-correct: the
     * token index is derived from the offset (token count of the trimmed
@@ -159,18 +139,4 @@ package object functions {
   /** Exact word n-gram Jaccard (hashed grams, codegen'd kernel). */
   def word_ngram_jaccard(a: Column, b: Column, n: Int = 3): Column =
     e2col(WordNgramJaccardExpr(col2e(a.cast("string")), col2e(b.cast("string")), n))
-
-  /** Rolling-hash document fingerprint: xxhash64 of the normalized text —
-    * cheap exact-dup fingerprint for the documents pipeline. */
-  def doc_fingerprint(text: Column): Column =
-    xxhash64(regexp_replace(lower(text), "\\s+", " "))
-
-  /** Seeded permutation key (SURVEY.md O4): ordering by xxhash64(seed, keys)
-    * is a deterministic, distributed, order-independent shuffle — the
-    * reproducible analogue of the reference's random.Random(1234).shuffle
-    * (`main_scripts/step3.4_train_and_test_model_for_mention_filtering.py:139`).
-    * Unlike orderBy(rand(seed)), the permutation depends only on row CONTENT,
-    * so it survives repartitioning and reruns. */
-  def permutation_key(seed: Long, keys: Column*): Column =
-    xxhash64((lit(seed) +: keys): _*)
 }

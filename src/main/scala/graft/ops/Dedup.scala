@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.StateTables
@@ -134,19 +133,9 @@ object Dedup {
     } finally hashed.unpersist()
   }
 
-  /** N-gram (token) Jaccard near-dup over word n-grams: candidates from
-    * minhash-LSH of the token-ngram string space, verified by exact token
-    * n-gram Jaccard. */
-  def ngramJaccardNearDup(spark: SparkSession, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      threshold: Double = 0.7, seed: Long = 42L): DataFrame = {
-    val (cands, release) = minhashCandidatesManaged(docs, idCol, textCol, seed = seed)
-    try ngramJaccardNearDupFrom(spark, docs, cands, idCol, textCol, n, threshold)
-    finally release()
-  }
-
-  /** N-gram verification+clustering over precomputed candidates (see
-    * minhashNearDupFrom). */
+  /** N-gram (token) Jaccard near-dup over precomputed minhash-LSH
+    * candidates (see minhashNearDupFrom), verified by exact word n-gram
+    * Jaccard. */
   def ngramJaccardNearDupFrom(spark: SparkSession, docs: DataFrame,
       cands: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       n: Int = 3, threshold: Double = 0.7): DataFrame = {
@@ -228,11 +217,6 @@ object Dedup {
       col("cluster_id").cast("long").as("dup_of"))
   }
 
-  /** Keep-one view: docs minus non-representative near-duplicates. */
-  def dedupedView(spark: SparkSession, docs: DataFrame, dups: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    docs.join(dups.select(col(idCol)), Seq(idCol), "left_anti")
-
   // ---- Incremental near-dup (SURVEY.md §2.12 row I8, production path) ----
 
   /** Committed dedup state for the minhash near-dup family: the LSH band
@@ -297,9 +281,7 @@ object Dedup {
     * retracted base-edge set (stop-key cap crossings), exposed for metrics
     * and for DedupIncrementalSpec's survivor-check assertions. */
   final case class DedupAttachResult(dups: DataFrame, state: MinhashDedupState,
-      removed: DataFrame) {
-    def removedPairCount(): Long = removed.count()
-  }
+      removed: DataFrame)
 
   /** Incremental near-dup attach of an inserts-only delta batch against a
     * committed state (DeltaDedup.attach with the production xxhash kernel).

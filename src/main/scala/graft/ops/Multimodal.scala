@@ -1,21 +1,22 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{cosine_sim, hash_embed}
+import graft.functions.hash_embed
 
 /** Multimodal-column plumbing for the training-data pipeline: treat
   * image/audio/video payloads as opaque BINARY columns with typed metadata,
-  * and run decode / feature-extract / frame-sample as batch transforms.
+  * and run decode / feature-extract as batch transforms.
   *
   * STUB BOUNDARY (clearly marked): no image/audio codecs ship in this
-  * container, so `fakeDecode*` below produce deterministic pseudo-features
-  * from the bytes (hash-embedding of a hex prefix). Everything AROUND the
-  * stub is real and tested: schema contract, null/short-payload handling,
-  * batch shape, partitioning. A real decoder replaces exactly the two
-  * `fakeDecode*` expressions (e.g. with a Pandas-UDF/mapInPandas stage in a
-  * PySpark deployment, or a JNI codec here), nothing else moves.
+  * container, so `fakeDecodeFeatures` below produces deterministic
+  * pseudo-features from the bytes (hash-embedding of a hex prefix).
+  * Everything AROUND the stub is real and tested: schema contract,
+  * null/short-payload handling, batch shape, partitioning. A real decoder
+  * replaces exactly the `fakeDecodeFeatures` expression (e.g. with a
+  * Pandas-UDF/mapInPandas stage in a PySpark deployment, or a JNI codec
+  * here), nothing else moves.
   *
   * Reference analogue: none — the reference is text-only; this is part of the
   * engine's web-corpus surface.
@@ -50,19 +51,6 @@ object Multimodal {
       dim: Int = 64): org.apache.spark.sql.Column =
     hash_embed(hex(substring(binCol, 1, 64)), dim)
 
-  /** Frame sampling plumbing for video-like payloads: split the payload into
-    * `nFrames` evenly spaced 16-byte windows ("frames"), one feature vector
-    * each. Real decoder replaces the window hash with a frame decode. */
-  def fakeFrameFeatures(df: DataFrame, binCol: String = "payload",
-      nFrames: Int = 4, dim: Int = 32): DataFrame = {
-    val b = col(binCol)
-    val frames = transform(sequence(lit(0), lit(nFrames - 1)), f => {
-      val off = (f * greatest(length(b) / nFrames, lit(1))) + 1
-      hash_embed(hex(b.substr(off.cast("int"), lit(16))), dim)
-    })
-    df.withColumn("frame_features", frames)
-  }
-
   /** Media near-dup: identical/near-identical payload features within
     * cosine >= threshold (pairs via exact payload-hash buckets first,
     * falling back to feature cosine for the rest). */
@@ -70,9 +58,4 @@ object Multimodal {
       dim: Int = 64): DataFrame =
     df.withColumn("payload_sha", sha2(col(binCol), 256))
       .withColumn("features", fakeDecodeFeatures(col(binCol), dim))
-
-  /** Pairwise feature cosine between two feature columns (for tests/joins). */
-  def featureCosine(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    cosine_sim(a, b)
 }

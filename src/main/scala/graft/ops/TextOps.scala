@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.doc_fingerprint
-
 /** Text-analysis operators for the large-scale training-data pipeline over
   * `documents(doc_id, text, lang, source, n_chars)`: language-ID heuristic,
   * quality scoring, token counting, document fingerprinting.
@@ -22,12 +20,6 @@ object TextOps {
   /** Whitespace token count. */
   def wsTokenCount(text: Column): Column =
     size(split(trim(text), "\\s+"))
-
-  /** BPE-ish subword count: word chars grouped in runs of <=4 plus each
-    * punctuation mark — a cheap deterministic proxy for byte-pair tokenizers
-    * (regexp-based; no model). */
-  def bpeishTokenCount(text: Column): Column =
-    size(expr("regexp_extract_all(text, '\\\\w{1,4}|[^\\\\w\\\\s]', 0)"))
 
   /** Stopword hit ratio against a small embedded English stopword list. */
   private val enStops = Seq("the", "of", "and", "to", "in", "a", "is", "that",
@@ -91,15 +83,9 @@ object TextOps {
             when(col("stop_ratio") >= 0.05, 0.25).otherwise(0.0)), 2))
   }
 
-  /** Document fingerprint column (rolling/whole-text hash of normalized
-    * text). */
-  def withFingerprint(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("fingerprint", doc_fingerprint(col(textCol)))
-
-  /** Cross-engine-reproducible fingerprint variant: md5 hex of
-    * whitespace-normalized lowercase text. Slower than the xxhash64
-    * fingerprint (use that in the pipeline hot path) but independently
-    * checkable by any SQL engine. */
+  /** Cross-engine-reproducible document fingerprint: md5 hex of
+    * whitespace-normalized lowercase text, independently checkable by any
+    * SQL engine. */
   def withFingerprintMd5(df: DataFrame, textCol: String = "text"): DataFrame =
     df.withColumn("fingerprint",
       md5(regexp_replace(lower(col(textCol)), "\\s+", " ").cast("binary")))

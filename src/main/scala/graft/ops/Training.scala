@@ -290,12 +290,4 @@ object Training {
     Scoring.Weights(r.getDouble(0), r.getDouble(1), r.getDouble(2),
       r.getDouble(3), r.getDouble(4), r.getDouble(5))
   }
-
-  def saveWeights(spark: org.apache.spark.sql.SparkSession, w: Scoring.Weights,
-      path: String): Unit =
-    weightsToDf(spark, w).coalesce(1).write.mode("overwrite").parquet(path)
-
-  def loadWeights(spark: org.apache.spark.sql.SparkSession,
-      path: String): Scoring.Weights =
-    weightsFromDf(spark.read.parquet(path))
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -51,10 +51,6 @@ object AnnJson {
   def parsed(df: DataFrame, jsonCol: String = "json"): DataFrame =
     df.withColumn("doc", from_json(col(jsonCol), DocSchema))
       .withColumn("parse_ok", col("doc").isNotNull)
-
-  /** Number of corrupt (unparseable) rows — feed Metrics.countMetric. */
-  def corruptCount(parsedDf: DataFrame): Long =
-    parsedDf.filter(!col("parse_ok")).count()
 
   /** One row per accepted annotation: the reference's per-ann gates
     * (Negation == Affirmed, STY, Experiencer == Patient, surface length above

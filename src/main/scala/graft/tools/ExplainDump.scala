@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
 import graft.gen.{Synth, SynthParams}

@@ -1,13 +1,21 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkEntry
 
 /** Dev tool: run ONE SparkEntry query (or bench override) by name against a
-  * testdata dir, print its wall per rep and optionally the formatted plan.
+  * testdata dir, print its wall per rep and optionally the formatted
+  * executed plan of every SQL execution it runs.
   *
   * Usage: QProbe <name> <sfDir> [reps] [--explain] [--override]
+  * --explain prints each execution's plan as it ends (one block per
+  * execution per rep; reps=1 prints the query's plans once). An entry that
+  * finishes eagerly — the driver-finished CC of g03/g11 — returns a
+  * one-node LocalTableScan, so its returned frame's plan alone would hide
+  * the dataflow that ran.
   * Extra session confs via SPARK_GRAFT_CONF="k=v;k=v" (same knob as Bench),
   * shuffle partitions via SPARK_GRAFT_PARTS (default: Bench's data-scaled
   * setting so probes match bench conditions).
@@ -40,7 +48,14 @@ object QProbe {
     // inverted and the flag ran the opposite variant)
     val fn = (if (useOverride) SparkEntry.queries ++ SparkEntry.benchOverrides
               else SparkEntry.benchOverrides ++ SparkEntry.queries)(name)
-    if (explain) fn(spark, sfDir).explain("formatted")
+    if (explain) spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        println(s"QPROBE plan $name action=$funcName\n" +
+          qe.explainString(ExplainMode.fromString("formatted")))
+      override def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    })
     (1 to reps).foreach { rep =>
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()

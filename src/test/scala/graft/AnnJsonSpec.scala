@@ -52,7 +52,6 @@ class AnnJsonSpec extends SparkSpec {
     val parsed = AnnJson.parsed(df)
     parsed.count() shouldBe 3 // nothing thrown, nothing dropped at parse time
     parsed.filter(col("parse_ok")).select("doc_id").as[Long].collect().toSet shouldBe Set(1L)
-    AnnJson.corruptCount(parsed) shouldBe 2L
     AnnJson.annotations(parsed).select("doc_id").distinct()
       .as[Long].collect().toSet shouldBe Set(1L)
   }

@@ -147,9 +147,6 @@ class AnnTextOpsSpec extends SparkSpec {
     val df = Seq(("a bb  ccc", 3), ("  x ", 1)).toDF("text", "expected")
     df.select(TextOps.wsTokenCount(col("text")).as("n"), col("expected"))
       .collect().foreach(r => r.getInt(0) shouldBe r.getInt(1))
-    Seq(Tuple1("hello, world! supercalifragilistic"))
-      .toDF("text")
-      .select(TextOps.bpeishTokenCount(col("text"))).as[Int].head() should be > 6
   }
 
   test("langid heuristic: stopword-rich english vs german vs gibberish") {
@@ -175,10 +172,10 @@ class AnnTextOpsSpec extends SparkSpec {
 
   test("fingerprint is whitespace-normalization invariant") {
     val df = Seq(("a  b\tc", "a b c")).toDF("x", "y")
-    val r = TextOps.withFingerprint(df.select(col("x").as("text")))
-      .select("fingerprint").as[Long].head()
-    val r2 = TextOps.withFingerprint(df.select(col("y").as("text")))
-      .select("fingerprint").as[Long].head()
+    val r = TextOps.withFingerprintMd5(df.select(col("x").as("text")))
+      .select("fingerprint").as[String].head()
+    val r2 = TextOps.withFingerprintMd5(df.select(col("y").as("text")))
+      .select("fingerprint").as[String].head()
     r shouldBe r2
   }
 
@@ -199,11 +196,6 @@ class AnnTextOpsSpec extends SparkSpec {
     }
     // null payload propagates to null features, no exception
     rows(2).isNullAt(rows(2).fieldIndex("features")) shouldBe true
-    // frame sampling emits nFrames vectors
-    val ff = Multimodal.fakeFrameFeatures(df.filter(col("payload").isNotNull))
-      .select(org.apache.spark.sql.functions.size(col("frame_features")))
-      .as[Int].collect()
-    all(ff) shouldBe 4
   }
 
   test("decontaminate: oversized eval slice takes the shuffle path and matches broadcast") {

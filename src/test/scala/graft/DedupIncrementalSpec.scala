@@ -64,7 +64,7 @@ class DedupIncrementalSpec extends SparkSpec {
         col("cluster_id").cast("long").as("dup_of"))) shouldBe
       Set((2L, 1L), (3L, 1L))
     val res = Dedup.minhashNearDupAttach(spark, state, all, delta, maxBucket = 3)
-    res.removedPairCount() shouldBe 3L
+    res.removed.count() shouldBe 3L
     dupSet(res.dups) shouldBe dupSet(Dedup.minhashNearDup(spark, all,
       maxBucket = 3))
   }
@@ -103,7 +103,7 @@ class DedupIncrementalSpec extends SparkSpec {
     val remaining = base.filter(col("doc_id") < 4 || col("doc_id") === 10L)
     val res = Dedup.minhashNearDupDetach(spark, state, remaining,
       Seq(4L, 5L).toDF("doc_id"), maxBucket = 3)
-    res.removedPairCount() shouldBe 0L
+    res.removed.count() shouldBe 0L
     dupSet(res.dups) shouldBe Set((2L, 1L), (3L, 1L))
     dupSet(res.dups) shouldBe dupSet(Dedup.minhashNearDup(spark, remaining,
       maxBucket = 3))

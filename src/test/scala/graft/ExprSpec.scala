@@ -160,14 +160,6 @@ class ExprSpec extends SparkSpec {
   }
 
   // --- context window ---
-  test("context_window slices ±w tokens around the mention") {
-    import spark.implicits._
-    val text = "a b c d e Xx Yy f g h i"
-    val df = Seq((text, "Xx Yy")).toDF("text", "surface")
-    val r = df.select(context_window(col("text"), col("surface"), 2)).as[String].head()
-    r shouldBe "d e Xx Yy f g"
-  }
-
   test("context_window_at does not overshoot when the mention is glued to punctuation") {
     import spark.implicits._
     // "(Gadget" is ONE whitespace-token: the "(" fragment before the mention

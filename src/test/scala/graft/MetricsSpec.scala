@@ -66,17 +66,6 @@ class MetricsSpec extends SparkSpec {
       "fp_identical_surface" -> 1L, "fp_other" -> 1L)
   }
 
-  test("permutation_key is deterministic and partitioning-independent") {
-    import graft.functions.permutation_key
-    val df = spark.range(100).toDF("id")
-    val order1 = df.orderBy(permutation_key(7L, col("id")))
-      .select("id").as[Long].collect().toSeq
-    val order2 = df.repartition(7).orderBy(permutation_key(7L, col("id")))
-      .select("id").as[Long].collect().toSeq
-    order1 shouldBe order2
-    order1 should not be order1.sorted // actually permuted
-  }
-
   test("stageMetrics emits one row per partition with correct total") {
     val df = spark.range(1000).repartition(5).toDF()
     val m = Metrics.stageMetrics(df, "r1", "stage_x", 123L)

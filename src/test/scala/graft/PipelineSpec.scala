@@ -124,7 +124,7 @@ class PipelineSpec extends SparkSpec {
     // the model artifact is a committed stage checkpoint
     val modelPath = s"$dir/s35_model"
     Files.exists(java.nio.file.Paths.get(modelPath, "_SUCCESS")) shouldBe true
-    val saved = graft.ops.Training.loadWeights(spark, modelPath)
+    val saved = graft.ops.Training.weightsFromDf(spark.read.parquet(modelPath))
     // resume: the model is RELOADED (byte-identical artifact), not refitted —
     // and scoring still uses it
     val modelFiles = Files.list(java.nio.file.Paths.get(modelPath))
@@ -133,7 +133,7 @@ class PipelineSpec extends SparkSpec {
       Synth.dict(spark, p).toDF(), cfg, fitGold = None) // resume needs no gold
     Files.list(java.nio.file.Paths.get(modelPath))
       .toArray.map(_.toString).sorted shouldBe modelFiles
-    graft.ops.Training.loadWeights(spark, modelPath) shouldBe saved
+    graft.ops.Training.weightsFromDf(spark.read.parquet(modelPath)) shouldBe saved
     again.clusters.count() should be > 0L
   }
 

@@ -27,8 +27,9 @@ class ProdTwinAgreementSpec extends SparkSpec {
   }
 
   test("g02: production minhash near-dup == md5 twin on sf0.01 documents") {
-    val prod = Dedup.minhashNearDup(spark, docs())
-      .as[(Long, Long)].collect().toSet
+    val corpus = new Dedup.NearDupCorpus(spark, docs())
+    val prod = try corpus.minhash().as[(Long, Long)].collect().toSet
+      finally corpus.close()
     val twin = Portable.nearDupMd5(spark, docs(), "doc_id",
         Dedup.charShingles(lower(col("text")), 5), threshold = 0.8)
       .as[(Long, Long)].collect().toSet
@@ -36,8 +37,9 @@ class ProdTwinAgreementSpec extends SparkSpec {
   }
 
   test("g04: production ngram near-dup == md5 twin on sf0.01 documents") {
-    val prod = Dedup.ngramJaccardNearDup(spark, docs())
-      .as[(Long, Long)].collect().toSet
+    val corpus = new Dedup.NearDupCorpus(spark, docs())
+    val prod = try corpus.ngram().as[(Long, Long)].collect().toSet
+      finally corpus.close()
     val twin = Portable.nearDupMd5(spark, docs(), "doc_id",
         Portable.wordNgramSet(col("text"), 3), threshold = 0.7)
       .as[(Long, Long)].collect().toSet

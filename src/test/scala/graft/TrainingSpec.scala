@@ -178,8 +178,8 @@ class TrainingSpec extends SparkSpec {
   test("weights round-trip through the parquet model artifact") {
     val w = graft.ops.Scoring.Weights(1.5, -0.25, 0.125, 21.0, -3.5, 0.75)
     val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
-    Training.saveWeights(spark, w, s"$dir/model")
-    Training.loadWeights(spark, s"$dir/model") shouldBe w
+    Training.weightsToDf(spark, w).write.parquet(s"$dir/model")
+    Training.weightsFromDf(spark.read.parquet(s"$dir/model")) shouldBe w
     scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 }
